@@ -1,0 +1,6 @@
+"""Incremental knowledge-graph benchmark for itext2kg_spark.
+
+Run one measurement with ``python3 perfbench/run.py --workload <name>
+--seed <n> --seconds <s> --trace <0|1>`` from the repository root; see
+``perfbench/README.md`` for the workloads and metric definitions.
+"""
