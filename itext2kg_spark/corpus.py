@@ -30,11 +30,12 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from itext2kg_spark.dedup.clusters import near_dup_clusters
-from itext2kg_spark.sources.stream_hw import StreamEpochMixin
+from itext2kg_spark.dedup.clusters import near_dup_clusters, near_dup_components
+from itext2kg_spark.dedup.ngram import _materialize
+from itext2kg_spark.sources.stream_hw import StreamEpochMixin, write_json_atomic
 from itext2kg_spark.functions.text import (
     fingerprint_col,
     lang_pred_col,
@@ -128,8 +129,13 @@ def incremental_survivors(
       1. lang/quality filters + enrichment — same as the one-shot pass;
       2. exact: drop new docs whose fingerprint already exists in `stored`,
          then keep the min id per fingerprint within the batch;
-      3. near-dup: cluster stored ∪ remaining-new; a new doc survives iff
-         its cluster contains NO stored doc and it is the min-id NEW member.
+      3. near-dup: connected components of the verified LSH pairs over
+         stored ∪ remaining-new, kept for the ids a pair touches only; a
+         new doc survives iff it is untouched (a singleton), or its
+         component contains NO stored doc and it is the min-id NEW member.
+         The verdict joins that touched-component table with the batch
+         alone, so past the pair search the stored survivors are never
+         re-read: the cost is the batch plus the components it touches.
 
     Exact-mode (`near_dup_threshold=None`) incremental processing is
     EXACTLY equal to the one-shot pass whenever batches arrive in ascending
@@ -160,46 +166,36 @@ def incremental_survivors(
     if near_dup_threshold is None:
         return kept.withColumn("rep_id", F.col(id_col))
 
-    if stored is None:
-        clusters = near_dup_clusters(
-            kept, threshold=near_dup_threshold,
-            id_col=id_col, text_col=text_col, **lsh_kwargs,
-        )
-        reps = clusters.where(F.col(id_col) == F.col("rep_id"))
-        return kept.join(reps, id_col, "left_semi").withColumn(
-            "rep_id", F.col(id_col)
-        )
-
-    # near-dup vs history: cluster over stored ∪ new (LSH candidates across
-    # the union — one banded equi-join, linear in survivors + batch), then
-    # keep a new doc only if its cluster holds no stored doc and it is the
-    # min-id new member.
-    union = stored.select(
-        F.col(id_col), F.col(text_col), F.lit(True).alias("__stored")
-    ).unionByName(
-        kept.select(F.col(id_col), F.col(text_col), F.lit(False).alias("__stored"))
-    )
-    clusters = near_dup_clusters(
-        union, threshold=near_dup_threshold,
+    # the batch feeds both the pair search and the verdict below: compute
+    # its enrichment and exact dedup once
+    kept = _materialize(kept, "auto", size_src=new_docs)
+    docs = kept.select(id_col, text_col)
+    if stored is not None:
+        docs = stored.select(id_col, text_col).unionByName(docs)
+    # LSH pairs over stored ∪ new (banded buckets, linear in survivors +
+    # batch) -> components of the touched ids only. An
+    # untouched new doc is a singleton and survives, so the verdict reads
+    # only this table and the batch: a kept doc loses when its component
+    # holds a stored (non-kept) id or a smaller kept id.
+    comp = near_dup_components(
+        docs, threshold=near_dup_threshold,
         id_col=id_col, text_col=text_col, **lsh_kwargs,
     )
-    labeled = clusters.join(
-        union.select(id_col, "__stored"), id_col
+    in_comp = Window.partitionBy("comp")
+    labeled = comp.join(
+        kept.select(F.col(id_col).alias("id"), F.lit(True).alias("__kept")),
+        "id", "left",
+    ).select(
+        "id",
+        "__kept",
+        F.max(F.col("__kept").isNull()).over(in_comp).alias("__has_stored"),
+        F.min(F.when(F.col("__kept"), F.col("id"))).over(in_comp).alias("__min_kept"),
     )
-    verdict = labeled.groupBy("rep_id").agg(
-        F.max(F.col("__stored").cast("int")).alias("__has_stored"),
-        F.min(F.when(~F.col("__stored"), F.col(id_col))).alias("__min_new"),
-    )
-    winners = (
-        labeled.join(verdict, "rep_id")
-        .where(
-            ~F.col("__stored")
-            & (F.col("__has_stored") == 0)
-            & (F.col(id_col) == F.col("__min_new"))
-        )
-        .select(F.col(id_col))
-    )
-    return kept.join(winners, id_col, "left_semi").withColumn(
+    losers = labeled.where(
+        F.col("__kept")
+        & (F.col("__has_stored") | (F.col("id") != F.col("__min_kept")))
+    ).select(F.col("id").alias(id_col))
+    return kept.join(losers, id_col, "left_anti").withColumn(
         "rep_id", F.col(id_col)
     )
 
@@ -285,8 +281,7 @@ class CorpusStore(StreamEpochMixin):
         if os.path.exists(d):  # partial base from a crashed compaction
             shutil.rmtree(d)
         surv.write.mode("overwrite").parquet(os.path.join(d, "docs"))
-        with open(os.path.join(d, "_COMMITTED"), "w") as f:
-            json.dump({"through": through}, f)
+        write_json_atomic(os.path.join(d, "_COMMITTED"), {"through": through})
         if vacuum:
             for b in batches:
                 if b <= through:
@@ -352,6 +347,8 @@ class CorpusStore(StreamEpochMixin):
         if os.path.exists(d):  # partial snapshot from a crashed run
             shutil.rmtree(d)
         delta.write.mode("overwrite").parquet(os.path.join(d, "docs"))
-        with open(os.path.join(d, "_COMMITTED"), "w") as f:
-            json.dump({"batch_id": batch_id, "metrics": metrics or {}}, f)
+        write_json_atomic(
+            os.path.join(d, "_COMMITTED"),
+            {"batch_id": batch_id, "metrics": metrics or {}},
+        )
         return batch_id, self.load_delta(spark, batch_id)

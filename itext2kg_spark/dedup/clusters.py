@@ -17,8 +17,10 @@ all-pairs), components from `merge.components.connected_components`
 broadcast limit — thresholded near-dup graphs are sparse, |pairs| tracks
 true duplicates, not |docs|^2 — else shuffle-parallel min-label
 propagation with pointer jumping), and the final map is one equi-join of
-the small (touched-ids-only) component table back to the corpus. Everything
-is linear in documents + true-duplicate pairs.
+the small (touched-ids-only) component table back to the corpus. Callers
+that only need the touched ids (the incremental survivor verdict) take
+`near_dup_components` and skip that join. Everything is linear in
+documents + true-duplicate pairs.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from itext2kg_spark.dedup.ngram import jaccard_pairs
 from itext2kg_spark.merge.components import connected_components
 
 
-def near_dup_clusters(
+def near_dup_components(
     docs: DataFrame,
     pairs: DataFrame | None = None,
     threshold: float = 0.8,
@@ -41,8 +43,10 @@ def near_dup_clusters(
     text_col: str = "text",
     **pair_kwargs,
 ) -> DataFrame:
-    """(id_col, rep_id): every document mapped to the min doc-id of its
-    near-dup connected component; singletons map to themselves.
+    """(id, comp): every document touched by a verified near-dup pair,
+    mapped to the min id of its connected component. Untouched documents
+    are absent (each is its own singleton component), so the table is
+    proportional to the duplicate pairs, not to `docs`.
 
     `pairs` lets any pair family feed the clustering (e.g.
     `embedding_near_dups` output, or a pre-materialized pair table) — it
@@ -63,13 +67,27 @@ def near_dup_clusters(
             )
         else:
             raise ValueError(f"unknown near-dup method: {method!r}")
+    return connected_components(
+        docs.select(F.col(id_col).alias("id")), pairs.select("id_a", "id_b")
+    )
 
+
+def near_dup_clusters(
+    docs: DataFrame,
+    pairs: DataFrame | None = None,
+    id_col: str = "doc_id",
+    **kwargs,
+) -> DataFrame:
+    """(id_col, rep_id): every document mapped to the min doc-id of its
+    near-dup connected component; singletons map to themselves. This is
+    `docs ⟕ near_dup_components(docs, ...)` with untouched ids coalesced
+    to themselves; `kwargs` are those of `near_dup_components`.
+    """
+    comp = near_dup_components(docs, pairs, id_col=id_col, **kwargs)
+    # No broadcast hint: the component table is usually far smaller than
+    # the corpus, but web-crawl dup rates reach 30-50% — AQE picks
+    # broadcast-vs-shuffle from the actual materialized size.
     ids = docs.select(F.col(id_col).alias("id"))
-    comp = connected_components(ids, pairs.select("id_a", "id_b"))
-    # comp covers only ids touched by an edge; untouched docs are their own
-    # representative. No broadcast hint: the component table is usually far
-    # smaller than the corpus, but web-crawl dup rates reach 30-50% — AQE
-    # picks broadcast-vs-shuffle from the actual materialized size.
     return ids.join(comp, "id", "left").select(
         F.col("id").alias(id_col),
         F.coalesce(F.col("comp"), F.col("id")).alias("rep_id"),

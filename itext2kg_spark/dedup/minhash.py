@@ -4,10 +4,11 @@ The scale path for n-gram Jaccard: signatures are fixed-size (k hashes) per
 document regardless of length, candidate DOCS are the members of collided
 (band, band_signature) buckets (one groupBy — no bucket self-join, no pair
 expansion), and only candidates pay the exact-verify cost. With k=64, b=16
-bands of r=4 rows, P(candidate | J=0.8) ≈ 1-(1-0.8^4)^16 ≈ 0.9997 per PAIR —
-and id-level recall (either endpoint collides with ANY near-dup partner) is
-weaker still, so verified output matches exact Jaccard pairs with
-near-certain recall.
+bands of r=4 rows, P(candidate | J=0.8) ≈ 1-(1-0.8^4)^16 ≈ 0.9997 per PAIR.
+Verification only needs the weaker id-level condition (each endpoint
+collides with ANY near-dup partner), so recall is at least that pair-level
+0.9997 and verified output matches exact Jaccard pairs with near-certain
+recall.
 
 Fully Catalyst, no Python stage: gram hashes are `xxhash64(gram) mod p`
 (p = 2^31-1, so the (a*h+b) mod p permutation products fit in int64), and the
@@ -136,7 +137,7 @@ def minhash_lsh_pairs(
     # at most bands× duplicate ids from the (cheaper) join build.
     cand_ids = (
         banded.groupBy("band", "bsig")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .agg(F.collect_list("id").alias("ids"))
         .where(F.size("ids") > 1)
         .select(F.explode("ids").alias("id"))
     )

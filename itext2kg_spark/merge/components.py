@@ -46,14 +46,14 @@ def _driver_union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
-    id_col: str = "id",
     max_iter: int = 25,
     driver_limit: int = 2_000_000,
 ) -> DataFrame:
     """vertices(id) + edges(id_a, id_b) -> (id, comp); comp = min id in component.
 
-    Only vertices touched by at least one edge enter the iteration — untouched
-    vertices are their own component by definition, so the loop state is
+    Only vertices touched by at least one edge are returned, on either path —
+    untouched vertices are their own component by definition (callers
+    coalesce them to themselves), so the loop state is
     O(|matched items|), not O(|all items|): at web scale the similarity graph
     is sparse and this is the difference between shuffling a few million rows
     and shuffling the whole entity table every iteration.
@@ -66,16 +66,12 @@ def connected_components(
     # to the shuffle-parallel iteration below.
     sample = edges.select("id_a", "id_b").limit(driver_limit + 1).collect()
     if len(sample) <= driver_limit:
-        if not sample:
-            return vertices.select(
-                F.col(id_col).alias("id"), F.col(id_col).alias("comp")
-            )
         comp = _driver_union_find([(r["id_a"], r["id_b"]) for r in sample])
-        spark = vertices.sparkSession
-        mapping = spark.createDataFrame(
+        # touched ids only, like the distributed path: callers coalesce
+        # untouched ids to themselves
+        return vertices.sparkSession.createDataFrame(
             list(comp.items()), schema="id long, comp long"
         )
-        return mapping  # resolve_items coalesces untouched ids to themselves
 
     und = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")

@@ -30,7 +30,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from itext2kg_spark.sources.stream_hw import StreamEpochMixin
+from itext2kg_spark.sources.stream_hw import StreamEpochMixin, write_json_atomic
 
 
 class KGStore(StreamEpochMixin):
@@ -116,8 +116,10 @@ class KGStore(StreamEpochMixin):
             # per-partition lineage of the batch input (north rule): which
             # input partitions contributed, row counts, distinct keys
             lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
-        with open(os.path.join(d, "_COMMITTED"), "w") as f:
-            json.dump({"batch_id": batch_id, "metrics": metrics or {}}, f)
+        write_json_atomic(
+            os.path.join(d, "_COMMITTED"),
+            {"batch_id": batch_id, "metrics": metrics or {}},
+        )
         # streaming high-water cache, AFTER the commit marker (see
         # last_stream_epoch): a crash between the two writes leaves the
         # cache stale-low, which the bounded catch-up scan repairs — replay

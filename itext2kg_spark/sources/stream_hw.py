@@ -25,13 +25,32 @@ import json
 import os
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Write `obj` as JSON to `path` so that readers see either no file or
+    the whole of it: a tmp file in the same directory, fsynced, then
+    `os.replace`d over `path`, and the directory fsynced so the rename
+    itself survives a crash. Commit markers must be written this way —
+    their existence alone marks a batch committed."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 class StreamEpochMixin:
     def _stream_hw_path(self, stream_key: str) -> str:
         h = hashlib.sha256(stream_key.encode("utf-8")).hexdigest()[:24]
         return os.path.join(self.root, "streams", f"{h}.json")
 
     def _write_stream_hw(self, stream_key: str, epoch: int, batch_id: int):
-        """Atomic (tmp + rename) per-stream high-water cache. Source of
+        """Atomic (write_json_atomic) per-stream high-water cache. Source of
         truth stays the _COMMITTED metadata; this file only bounds how far
         back last_stream_epoch must scan."""
         path = self._stream_hw_path(stream_key)
@@ -43,17 +62,14 @@ class StreamEpochMixin:
             prev = None
         if prev is not None and int(prev.get("stream_epoch", -1)) >= epoch:
             return
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "stream_key": stream_key,
-                    "stream_epoch": int(epoch),
-                    "batch_id": int(batch_id),
-                },
-                f,
-            )
-        os.replace(tmp, path)
+        write_json_atomic(
+            path,
+            {
+                "stream_key": stream_key,
+                "stream_epoch": int(epoch),
+                "batch_id": int(batch_id),
+            },
+        )
 
     def last_stream_epoch(self, stream_key: str) -> int | None:
         """Highest stream epoch committed for `stream_key` (a checkpoint-dir

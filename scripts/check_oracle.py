@@ -1,16 +1,18 @@
 """Local stand-in for the driver's correctness gate: run each queries() entry
 on Spark and its oracle_sql() on DuckDB over the same parquet, compare
-row-count + schema-width + order-insensitive value multiset.
+row-count + column names + order-insensitive value multiset
+(`result_diff`, which tests/test_oracle_corpus.py shares).
 
 Usage: python scripts/check_oracle.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -21,6 +23,37 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with one view per test-data table under `sf_dir`."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def result_diff(scols, srows, dcols, drows) -> list[str]:
+    """How a Spark result differs from its DuckDB oracle: row count, column
+    names (case-insensitive) and the order-insensitive value multiset.
+    Empty when they agree."""
+    scols = [c.lower() for c in scols]
+    dcols = [c.lower() for c in dcols]
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rows: spark={len(srows)} duck={len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols: spark={scols} duck={dcols}")
+    sm, dm = df_multiset(scols, srows), df_multiset(dcols, drows)
+    if sm != dm:
+        sset, dset = set(sm), set(dm)
+        problems.append(
+            f"vals: spark-only {[x for x in sm if x not in dset][:3]}"
+            f" duck-only {[x for x in dm if x not in sset][:3]}"
+        )
+    return problems
 
 
 def normalize_cell(v):
@@ -47,11 +80,7 @@ def main():
     only = sys.argv[2:] or None
     spark = get_spark(cores=8, shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -61,7 +90,6 @@ def main():
             continue
         t0 = time.time()
         sdf = fn(spark, sf_dir)
-        scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
         spark_t = time.time() - t0
         if name not in oracles:
@@ -69,28 +97,18 @@ def main():
             continue
         t0 = time.time()
         res = con.sql(oracles[name])
-        dcols = [c.lower() for c in res.columns]
         drows = res.fetchall()
         duck_t = time.time() - t0
-        ok_rows = len(srows) == len(drows)
-        ok_cols = sorted(c.lower() for c in scols) == sorted(dcols)
-        ok_vals = df_multiset([c.lower() for c in scols], srows) == df_multiset(
-            dcols, drows
-        )
-        status = "OK" if (ok_rows and ok_cols and ok_vals) else "FAIL"
+        problems = result_diff(sdf.columns, srows, res.columns, drows)
+        status = "FAIL" if problems else "OK"
         print(
             f"{name:24s} {status} spark={len(srows)} duck={len(drows)} "
-            f"cols={'ok' if ok_cols else scols + dcols} vals={'ok' if ok_vals else 'MISMATCH'} "
             f"({spark_t:.1f}s/{duck_t:.1f}s)"
         )
-        if status == "FAIL":
+        for p in problems:
+            print("  " + p)
+        if problems:
             failures.append(name)
-            sm = df_multiset([c.lower() for c in scols], srows)
-            dm = df_multiset(dcols, drows)
-            onlys = [x for x in sm if x not in set(dm)][:3]
-            onlyd = [x for x in dm if x not in set(sm)][:3]
-            print("  spark-only:", onlys)
-            print("  duck-only :", onlyd)
     print("FAILURES:", failures or "none")
     return 1 if failures else 0
 

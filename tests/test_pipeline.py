@@ -185,3 +185,28 @@ def test_run_batch_token_mode_incremental_equals_oneshot(spark, tmp_path):
 
     assert canon(edges_inc) == canon(edges_one)
     assert len(canon(edges_inc)) > 0
+
+
+def test_kg_commit_marker_is_atomic(spark, tmp_path, monkeypatch):
+    """A crash while the snapshot's _COMMITTED marker is written (here: the
+    rename of its fsynced tmp file fails) leaves the batch uncommitted; the
+    next run_batch takes the same id and commits it."""
+    import os
+
+    store = KGStore(str(tmp_path / "kg"))
+    p = KGPipeline()
+    pages = synth_pages(spark, 5, seed=1)
+
+    def crash(src, dst):
+        raise OSError("crash before the marker rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError):
+            p.run_batch(pages, store)
+    assert store.committed_batches() == []
+    assert store.next_batch_id() == 0
+
+    assert p.run_batch(pages, store) == 0
+    assert store.committed_batches() == [0]
+    assert store.load(spark)[1].count() > 0
