@@ -65,15 +65,6 @@ class MatchConfig:
     # Connected-components iteration cap (each iteration does neighbor-min +
     # pointer-jumping, so convergence is O(log diameter)).
     cc_max_iter: int = 25
-    # Exclude store rows exactly matched by a batch key from the cosine pool
-    # (matcher.py:53-63 unmatched_entities2). OFF by default: the reference
-    # merges a batch INTERNALLY before merging with the store, so a batch
-    # near-duplicate of store row R collapses onto R's surface form in that
-    # internal pass — which the exclusion would forbid in our single-pass
-    # formulation, making batch re-merge non-idempotent (replaying a batch
-    # would mint new entities). Turn on only for parity with a DIRECT
-    # two-canonical-KG merge, where both sides are already internally merged.
-    exclude_exact_matched_store: bool = False
 
     # Distinct-item ceiling for DISTRIBUTED leader-mode resolution: its fold
     # rank is a global row_number (a single-partition sort of the distinct
@@ -141,12 +132,6 @@ class PipelineConfig:
     embed: EmbedConfig = field(default_factory=EmbedConfig)
     # "atom" (quintuples with t_start/t_end) or "star" (t_obs only)
     mode: str = "atom"
-    # Materialize the extracted quintuple table before the merge consumers
-    # (3 of them) read it. True is right when extraction is expensive (LLM
-    # API calls — never re-extract); False trades bounded recompute of a
-    # cheap extractor for removing the checkpoint barrier from the serial
-    # path (the recompute is parallel work, the barrier is not).
-    materialize_quintuples: bool = True
     # shuffle partitioning for the merge stages; None = leave session default
     shuffle_partitions: int | None = None
     # Two-phase salted edge aggregation: >1 spreads each canonical triple's

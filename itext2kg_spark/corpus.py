@@ -25,9 +25,7 @@ hash-oracle-checkable (driver query `corpus_prepare`).
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, Window
@@ -35,7 +33,7 @@ from pyspark.sql import functions as F
 
 from itext2kg_spark.dedup.clusters import near_dup_clusters, near_dup_components
 from itext2kg_spark.dedup.ngram import _materialize
-from itext2kg_spark.sources.stream_hw import StreamEpochMixin, write_json_atomic
+from itext2kg_spark.sources.stream_hw import SnapshotLog, committed_ids, committing
 from itext2kg_spark.functions.text import (
     fingerprint_col,
     lang_pred_col,
@@ -200,7 +198,7 @@ def incremental_survivors(
     )
 
 
-class CorpusStore(StreamEpochMixin):
+class CorpusStore(SnapshotLog):
     """Append-only survivor store for cross-batch corpus dedup — the corpus
     analog of sources/store.py's KGStore, same atomic-commit protocol:
 
@@ -214,22 +212,6 @@ class CorpusStore(StreamEpochMixin):
     appending a day's crawl and rewriting the world. Resume/replay: a batch
     id that is already committed is a no-op returning the stored delta
     (idempotent, same as KGPipeline.run_batch)."""
-
-    def __init__(self, root: str):
-        self.root = root
-        os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
-
-    def _snap_dir(self, batch_id: int) -> str:
-        return os.path.join(self.root, "snapshots", f"batch={batch_id}")
-
-    def committed_batches(self) -> list[int]:
-        out = []
-        snaps = os.path.join(self.root, "snapshots")
-        for d in os.listdir(snaps):
-            m = re.fullmatch(r"batch=(\d+)", d)
-            if m and os.path.exists(os.path.join(snaps, d, "_COMMITTED")):
-                out.append(int(m.group(1)))
-        return sorted(out)
 
     # -- compaction ---------------------------------------------------------
     # The union-of-deltas read degrades as the store ages (one parquet
@@ -248,19 +230,8 @@ class CorpusStore(StreamEpochMixin):
 
     def current_base(self) -> int | None:
         """Highest committed base's `through` batch id, or None."""
-        best = None
-        try:
-            names = os.listdir(self._base_root())
-        except FileNotFoundError:
-            return None
-        for d in names:
-            m = re.fullmatch(r"through=(\d+)", d)
-            if m and os.path.exists(
-                os.path.join(self._base_root(), d, "_COMMITTED")
-            ):
-                t = int(m.group(1))
-                best = t if best is None else max(best, t)
-        return best
+        bases = committed_ids(self._base_root(), "through")
+        return bases[-1] if bases else None
 
     def compact(self, spark, vacuum: bool = False) -> int | None:
         """Fold the current survivor corpus (base + all committed deltas)
@@ -277,11 +248,8 @@ class CorpusStore(StreamEpochMixin):
             return None
         through = batches[-1]
         surv = self.load_survivors(spark)
-        d = self._base_dir(through)
-        if os.path.exists(d):  # partial base from a crashed compaction
-            shutil.rmtree(d)
-        surv.write.mode("overwrite").parquet(os.path.join(d, "docs"))
-        write_json_atomic(os.path.join(d, "_COMMITTED"), {"through": through})
+        with committing(self._base_dir(through), {"through": through}) as d:
+            surv.write.mode("overwrite").parquet(os.path.join(d, "docs"))
         if vacuum:
             for b in batches:
                 if b <= through:
@@ -305,10 +273,6 @@ class CorpusStore(StreamEpochMixin):
 
     def load_delta(self, spark, batch_id: int) -> DataFrame:
         return spark.read.parquet(os.path.join(self._snap_dir(batch_id), "docs"))
-
-    def snapshot_metrics(self, batch_id: int) -> dict:
-        with open(os.path.join(self._snap_dir(batch_id), "_COMMITTED")) as f:
-            return json.load(f)
 
     def run_batch(
         self,
@@ -334,21 +298,13 @@ class CorpusStore(StreamEpochMixin):
         high-water cache) must use THIS id, not committed_batches()[-1],
         which is only equal under a single-writer assumption."""
         spark = new_docs.sparkSession
-        batches = self.committed_batches()
         if batch_id is None:
-            batch_id = (batches[-1] + 1) if batches else 0
-        elif batch_id in batches:
+            batch_id = self.next_batch_id()
+        elif batch_id in self.committed_batches():
             return batch_id, self.load_delta(spark, batch_id)
 
         stored = self.load_survivors(spark)
         delta = incremental_survivors(new_docs, stored, **kwargs)
-
-        d = self._snap_dir(batch_id)
-        if os.path.exists(d):  # partial snapshot from a crashed run
-            shutil.rmtree(d)
-        delta.write.mode("overwrite").parquet(os.path.join(d, "docs"))
-        write_json_atomic(
-            os.path.join(d, "_COMMITTED"),
-            {"batch_id": batch_id, "metrics": metrics or {}},
-        )
+        with self._commit_snapshot(batch_id, metrics) as d:
+            delta.write.mode("overwrite").parquet(os.path.join(d, "docs"))
         return batch_id, self.load_delta(spark, batch_id)

@@ -183,7 +183,7 @@ _VEC_PATTERNS = (
 def _vectorized_extract_pdf(pdf):
     """Batch kernel: facts pandas frame (lineage cols + fact) -> quintuple
     frame, via .str.extract (C regex) per grammar pattern — no per-row
-    Python. Shared by the staged and fused paths."""
+    Python."""
     import pandas as pd
 
     s = pdf["fact"].astype(str)

@@ -40,10 +40,13 @@ _FAST_FORMATS = [
 # a small set of date surface forms across millions of mentions, so dateutil
 # (~30-50us per parse) should run once per DISTINCT string per worker, not
 # once per element — the same worker-lifetime bounded-cache pattern as the
-# simhash token cache (guide §4.5: heavyweight per-item work once). Results
-# for a given string are identical with or without the memo (dateutil parse
-# of a fully-specified string is deterministic); the bound caps worker memory
-# on adversarial corpora with unbounded distinct strings.
+# simhash token cache (guide §4.5: heavyweight per-item work once). For a
+# fully-specified string the memo changes nothing (its dateutil parse is
+# deterministic). An underspecified one ("July 17th", no year) takes its
+# missing fields from the current date, so a worker that outlives a day or
+# year boundary keeps serving its first parse where the reference would
+# re-read the clock. The bound caps worker memory on adversarial corpora
+# with unbounded distinct strings.
 _DATEUTIL_CACHE: dict[str, float | None] = {}
 _DATEUTIL_CACHE_MAX = 1 << 20
 
@@ -89,7 +92,11 @@ def _fast_parse(col: Column) -> Column:
         digit are jump tokens dateutil skips wholesale, so stripping them
         and parsing the month-name layouts is equivalent. Anything else
         (spaced suffixes, lowercase months, 2-digit years) still falls
-        through to the dateutil fallback unchanged."""
+        through to the dateutil fallback unchanged.
+
+    Years below 100 are left to dateutil: Catalyst reads `0050` as year 50
+    and accepts year 0, while dateutil maps two-digit-valued years into the
+    current century and rejects year 0."""
     tries = [F.try_to_timestamp(col, F.lit(fmt)) for fmt in _FAST_FORMATS]
     tries += [
         F.try_to_timestamp(col, F.lit("MM.dd.yyyy")),
@@ -100,7 +107,8 @@ def _fast_parse(col: Column) -> Column:
         F.try_to_timestamp(stripped, F.lit(fmt))
         for fmt in ("MMMM d yyyy", "MMMM d, yyyy", "d MMMM yyyy")
     ]
-    return F.coalesce(*tries)
+    ts = F.coalesce(*tries)
+    return F.when(F.year(ts) >= 100, ts)
 
 
 @F.pandas_udf(DoubleType())
@@ -175,24 +183,6 @@ def parse_timestamp_array(col: Column, use_dateutil_fallback: bool = True) -> Co
     return F.when(miss, combined).otherwise(fast_ok)
 
 
-def _with_fast_arrays(df, cols: list[str]):
-    """Project the Catalyst fast-parse of each array column as a REAL column
-    (`__fast_<c>`) so it evaluates once per row however many consumers read
-    it (Catalyst keeps the projection boundary: the aliases are non-cheap and
-    multiply referenced). Shared by the split and inline variants."""
-    fast_names = {c: f"__fast_{c}" for c in cols}
-    base = df.select(
-        "*",
-        *[
-            F.transform(
-                F.col(c), lambda x: F.unix_timestamp(_fast_parse(x)).cast("double")
-            ).alias(fast_names[c])
-            for c in cols
-        ],
-    )
-    return base, fast_names
-
-
 def _array_miss(col: Column, fast: Column) -> Column:
     return F.coalesce(
         F.exists(
@@ -203,9 +193,7 @@ def _array_miss(col: Column, fast: Column) -> Column:
     )
 
 
-def parse_timestamp_array_columns(
-    df, cols: list[str], use_dateutil_fallback: bool = True
-):
+def parse_timestamp_array_columns(df, cols: list[str]):
     """Replace each array<string> column with its parsed array<double>.
 
     Why not just `parse_timestamp_array` per column: a pandas UDF anywhere in
@@ -217,16 +205,22 @@ def parse_timestamp_array_columns(
     element flow through dateutil, and the two branches union back. Upstream
     should be (cheaply recomputable or) checkpointed since both branches scan
     it.
+
+    The Catalyst fast-parse of each array is projected as a REAL column
+    (`__fast_<c>`) so it evaluates once per row although the miss flag and
+    both branches read it (Catalyst keeps the projection boundary: the
+    aliases are non-cheap and multiply referenced).
     """
-    base, fast_names = _with_fast_arrays(df, cols)
-    if not use_dateutil_fallback:
-        sel = [
-            F.filter(F.col(fast_names[c]), lambda x: x.isNotNull()).alias(c)
-            if c in cols
-            else c
-            for c in df.columns
-        ]
-        return base.select(*sel)
+    fast_names = {c: f"__fast_{c}" for c in cols}
+    base = df.select(
+        "*",
+        *[
+            F.transform(
+                F.col(c), lambda x: F.unix_timestamp(_fast_parse(x)).cast("double")
+            ).alias(fast_names[c])
+            for c in cols
+        ],
+    )
     miss = None
     for c in cols:
         m = _array_miss(F.col(c), F.col(fast_names[c]))
@@ -250,40 +244,3 @@ def parse_timestamp_array_columns(
         ]
     )
     return clean.unionByName(dirty)
-
-
-def parse_timestamp_array_inline(
-    df, cols: list[str], use_dateutil_fallback: bool = True
-):
-    """Single-pass row-gated variant of `parse_timestamp_array_columns`: no
-    clean/dirty branch split, so the input is scanned ONCE — the right shape
-    when upstream is expensive to recompute and unmaterialized (the
-    materialize_quintuples=False pipeline mode).
-
-    Why not `parse_timestamp_array` per column there: as a single expression
-    its fast-parse transform is substituted into every consumer (`fast_ok`,
-    the miss flag, both fallback arguments) and re-evaluated per appearance —
-    ~6 `try_to_timestamp` sweeps per array per row. Here the fast arrays are
-    materialized as REAL columns first, so each is computed once per row;
-    Catalyst keeps the projection boundary because the aliased expressions
-    are non-cheap and multiply referenced (same contract the clean/dirty
-    split relies on). Every row still crosses the ArrowEvalPython stage (the
-    row-gated UDF), which is why the split variant stays the default for
-    checkpointed inputs."""
-    base, fast_names = _with_fast_arrays(df, cols)
-    out = []
-    for c in df.columns:
-        if c not in cols:
-            out.append(F.col(c))
-            continue
-        fn = F.col(fast_names[c])
-        fast_ok = F.filter(fn, lambda x: x.isNotNull())
-        if not use_dateutil_fallback:
-            out.append(fast_ok.alias(c))
-            continue
-        miss = _array_miss(F.col(c), fn)
-        combined = _dateutil_epoch_array(
-            F.when(miss, F.col(c)), F.when(miss, fn)
-        )
-        out.append(F.when(miss, combined).otherwise(fast_ok).alias(c))
-    return base.select(*out)

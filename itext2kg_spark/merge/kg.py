@@ -39,12 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from itext2kg_spark.config import PipelineConfig
-from itext2kg_spark.extract.embed import with_embedding
 from itext2kg_spark.functions.normalize import norm_label, norm_name, norm_predicate
-from itext2kg_spark.functions.timeparse import (
-    parse_timestamp_array_columns,
-    parse_timestamp_array_inline,
-)
+from itext2kg_spark.functions.timeparse import parse_timestamp_array_columns
 from itext2kg_spark.functions.vectors import unit
 from itext2kg_spark.merge.resolve import resolve_items
 
@@ -103,20 +99,13 @@ def embed_entities(
     """(name, label) -> + embedding (weighted sum, raw like the reference) +
     emb (unit-normalized, for matching).
 
-    The input is already distinct on (name, label), so for recompute-cheap
-    embedders (the default) names and labels are embedded DIRECTLY — both
-    pandas UDFs fuse into ONE ArrowEvalPython stage, no distinct shuffle, no
-    join-back. An embedder wrapping a paid API should set
-    `prefers_distinct = True` to route through `with_embedding` instead
-    (each distinct string embedded exactly once, P9)."""
-    if getattr(embedder, "prefers_distinct", False):
-        d = with_embedding(distinct_entities, "name", "__emb_n", embedder)
-        d = with_embedding(d, "label", "__emb_l", embedder)
-    else:
-        e = embedder.udf()
-        d = distinct_entities.withColumn("__emb_n", e(F.col("name"))).withColumn(
-            "__emb_l", e(F.col("label"))
-        )
+    The input is already distinct on (name, label), so names and labels are
+    embedded DIRECTLY — both pandas UDFs fuse into ONE ArrowEvalPython stage,
+    no distinct shuffle, no join-back."""
+    e = embedder.udf()
+    d = distinct_entities.withColumn("__emb_n", e(F.col("name"))).withColumn(
+        "__emb_l", e(F.col("label"))
+    )
     combined = F.zip_with(
         "__emb_n",
         "__emb_l",
@@ -314,32 +303,29 @@ def canonicalize_kg(
     # distinct, predicate distinct, and the final remap; recomputing the
     # distill/extract UDF lineage per action would triple the extraction cost
     # (the reference likewise materializes extraction output before merging).
-    # cfg.materialize_quintuples=False skips the barrier for cheap extractors.
     q = _normalize_quintuples(quintuples, cfg.mode)
     ent_hint = pred_hint = None
-    if cfg.materialize_quintuples:
-        if existing_entities is None and existing_edges is None:
-            # Materialize via the SAME job that gathers cardinality hints:
-            # one tiny agg over the lazily-checkpointed table (first compute
-            # materializes it) yields approximate distinct-entity/predicate
-            # counts, letting both resolutions skip their path-decision
-            # count job and collect directly (see resolve_items
-            # n_items_hint — approximation only picks between
-            # output-equivalent physical paths).
-            q = q.localCheckpoint(eager=False)
-            st = q.agg(
-                F.approx_count_distinct(
-                    F.struct("subj_name", "subj_label")
-                ).alias("ns"),
-                F.approx_count_distinct(
-                    F.struct("obj_name", "obj_label")
-                ).alias("no"),
-                F.approx_count_distinct("pred").alias("np"),
-            ).first()
-            ent_hint = int(st["ns"]) + int(st["no"])
-            pred_hint = int(st["np"])
-        else:
-            q = q.localCheckpoint()
+    if existing_entities is None and existing_edges is None:
+        # Fresh batch: materialize via the SAME job that gathers cardinality
+        # hints — one tiny agg over the lazily-checkpointed table (first
+        # compute materializes it) yields approximate distinct-entity/
+        # predicate counts, letting both resolutions skip their path-decision
+        # count job and collect directly (see resolve_items n_items_hint —
+        # approximation only picks between output-equivalent physical paths).
+        q = q.localCheckpoint(eager=False)
+        st = q.agg(
+            F.approx_count_distinct(
+                F.struct("subj_name", "subj_label")
+            ).alias("ns"),
+            F.approx_count_distinct(
+                F.struct("obj_name", "obj_label")
+            ).alias("no"),
+            F.approx_count_distinct("pred").alias("np"),
+        ).first()
+        ent_hint = int(st["ns"]) + int(st["no"])
+        pred_hint = int(st["np"])
+    else:
+        q = q.localCheckpoint()
 
     def _resolve_entities():
         ents = _entity_mentions(q).withColumn("is_existing", F.lit(False))
@@ -354,33 +340,11 @@ def canonicalize_kg(
             )
             # batch rows that exactly equal a store row are dropped in favor
             # of the store row (exact-match pre-pass, matcher.py:41-63)
-            if cfg.match.exclude_exact_matched_store:
-                # direct two-KG-merge parity (see MatchConfig): the claimed
-                # store row leaves the cosine pool entirely
-                # (unmatched_entities2, matcher.py:53-63)
-                batch_keys = ents.select("name", "label").withColumn(
-                    "exact_hit", F.lit(True)
+            ents = ex.unionByName(
+                ents.join(
+                    ex.select("name", "label"), ["name", "label"], "left_anti"
                 )
-                ex = ex.join(batch_keys, ["name", "label"], "left").withColumn(
-                    "exact_hit", F.coalesce(F.col("exact_hit"), F.lit(False))
-                )
-                ents = ex.unionByName(
-                    ents.join(
-                        ex.select("name", "label"), ["name", "label"], "left_anti"
-                    ).withColumn("exact_hit", F.lit(False))
-                )
-            else:
-                ents = ex.unionByName(
-                    ents.join(
-                        ex.select("name", "label"), ["name", "label"], "left_anti"
-                    )
-                )
-        if getattr(embedder, "prefers_distinct", False):
-            # with_embedding's join-back references the distinct table twice;
-            # checkpoint so each branch doesn't recompute the mention groupBy.
-            # The default direct-embed path references it once — resolve's
-            # single collect executes the whole chain as ONE job.
-            ents = ents.localCheckpoint()
+            )
         ents = embed_entities(
             ents, embedder, cfg.embed.name_weight, cfg.embed.label_weight
         )
@@ -415,12 +379,8 @@ def canonicalize_kg(
             preds = exp.unionByName(
                 preds.join(exp.select("pred"), ["pred"], "left_anti")
             )
-        if getattr(embedder, "prefers_distinct", False):
-            preds = preds.localCheckpoint()
-            preds = with_embedding(preds, "pred", "embedding", embedder)
-        else:
-            # table is already distinct on pred — embed directly, one stage
-            preds = preds.withColumn("embedding", embedder.udf()(F.col("pred")))
+        # table is already distinct on pred — embed directly, one stage
+        preds = preds.withColumn("embedding", embedder.udf()(F.col("pred")))
         preds = preds.withColumn("emb", unit(F.col("embedding")))
         return resolve_items(
             preds,
@@ -433,18 +393,17 @@ def canonicalize_kg(
             n_items_hint=pred_hint,
         )
 
-    # Fast path for fresh batches (no store tables, cheap embedder, both
-    # hints clearly under the driver limit): ONE job aggregates distinct
-    # entities AND predicates (kind-tagged union), embeds them in a single
-    # ArrowEvalPython stage and collects once; the per-kind numpy
-    # resolutions then run on the driver exactly as resolve_items'
-    # driver path would. Incremental merges and big batches fall back to
-    # the per-kind resolve_items pair on two driver threads.
+    # Fast path for fresh batches (no store tables, both hints clearly under
+    # the driver limit): ONE job aggregates distinct entities AND predicates
+    # (kind-tagged union), embeds them in a single ArrowEvalPython stage and
+    # collects once; the per-kind numpy resolutions then run on the driver
+    # exactly as resolve_items' driver path would. Incremental merges and big
+    # batches fall back to the per-kind resolve_items pair on two driver
+    # threads.
     limit = cfg.match.effective_broadcast_limit(2 * cfg.embed.dim)
     if (
         existing_entities is None
         and existing_edges is None
-        and not getattr(embedder, "prefers_distinct", False)
         and ent_hint is not None
         and pred_hint is not None
         and (ent_hint + pred_hint) * 1.2 + 200 <= limit
@@ -485,16 +444,12 @@ def canonicalize_kg(
     # P4: t_start/t_end string arrays -> epoch arrays with dateutil fallback
     # (relationship.py:44-57 parity, incl. fuzzy forms). Only this consumer
     # reads the temporal columns, so the parse lives here:
-    #  * materialized mode — clean/dirty row split (parse_timestamp_array_
-    #    columns) applied to the CHECKPOINTED quintuple table BEFORE the
-    #    remap joins: both branches re-scan cheap checkpointed rows, the
-    #    all-fast-path majority keeps a pure-JVM plan, and the three
-    #    broadcast joins run ONCE over the branch union (splitting after the
-    #    joins executed them once per branch — round-2 finding).
-    #  * no-materialize mode — the split would re-run the extractor once per
-    #    branch, so the single-pass row-gated variant is used instead (one
-    #    scan; fast arrays materialized as columns so the per-element
-    #    try_to_timestamp sweep runs once per row, not per consumer).
+    #  * clean/dirty row split (parse_timestamp_array_columns) applied to the
+    #    CHECKPOINTED quintuple table BEFORE the remap joins: both branches
+    #    re-scan cheap checkpointed rows, the all-fast-path majority keeps a
+    #    pure-JVM plan, and the three broadcast joins run ONCE over the
+    #    branch union (splitting after the joins executed them once per
+    #    branch — round-2 finding).
     #  * temporal_empty mode — the caller asserts every t_start/t_end array
     #    is empty BY CONSTRUCTION (the token extractor emits literal empty
     #    arrays; parsing an empty array is an empty array), so the parse
@@ -507,10 +462,8 @@ def canonicalize_kg(
         q_parsed = q.withColumn("t_start", empty_d).withColumn(
             "t_end", empty_d
         )
-    elif cfg.materialize_quintuples:
-        q_parsed = parse_timestamp_array_columns(q, ["t_start", "t_end"])
     else:
-        q_parsed = parse_timestamp_array_inline(q, ["t_start", "t_end"])
+        q_parsed = parse_timestamp_array_columns(q, ["t_start", "t_end"])
     mentions = (
         q_parsed.join(F.broadcast(sm), ["subj_name", "subj_label"])
         .join(F.broadcast(om), ["obj_name", "obj_label"])

@@ -52,7 +52,6 @@ def _driver_resolve(
     inclusive: bool,
     has_existing: bool,
     order_col: str | None,
-    has_exact_hit: bool = False,
     link_mode: str = "best",
     emb_col: str = "emb",
 ):
@@ -68,23 +67,12 @@ def _driver_resolve(
         if has_existing
         else np.zeros(n, dtype=bool)
     )
-    hit = (
-        np.asarray([bool(r["exact_hit"]) for r in rows])
-        if has_exact_hit
-        else np.zeros(n, dtype=bool)
-    )
 
     sims = mat @ mat.T
     np.fill_diagonal(sims, -np.inf)
     ok = sims >= threshold if inclusive else sims > threshold
     if has_existing:
         ok &= ~(exist[:, None] & exist[None, :])
-    if has_exact_hit:
-        # store rows already claimed by an exact batch match leave the cosine
-        # pool entirely (matcher.py:53-63 unmatched_entities2): they can be
-        # neither source nor target of a similarity link.
-        ok &= ~hit[:, None]
-        ok &= ~hit[None, :]
     sims_masked = np.where(ok, sims, -np.inf)
 
     # representative ordering: is_existing desc, first_seen asc (nulls
@@ -269,18 +257,15 @@ def resolve_items(
     emb_dim: int | None = None,
     n_items_hint: int | None = None,
 ) -> DataFrame:
-    """items(key_cols..., emb [, is_existing][, exact_hit][, order_col]) ->
+    """items(key_cols..., emb [, is_existing][, order_col]) ->
     items + (comp, is_rep) + canonical keys `canon_<key>`.
 
     `emb` must be unit-normalized. Items cluster when connected through
     best-match links at cosine >= threshold (ATOM) / > threshold (star).
-    Optional flag columns:
-      * `is_existing` — canonical-store rows; they never ORIGINATE links
-        (reference argmax runs batch-against-store only, matcher.py:65-94),
-        so a component contains at most one store entity and store rows
-        always canonicalize to themselves.
-      * `exact_hit` — store rows exactly matched by a batch key this batch;
-        excluded from the cosine pool entirely (matcher.py:53-63).
+    Optional flag column `is_existing` marks canonical-store rows; they
+    never ORIGINATE links (reference argmax runs batch-against-store only,
+    matcher.py:65-94), so a component contains at most one store entity and
+    store rows always canonicalize to themselves.
     `emb_dim` (vector width) byte-bounds the driver-collect path — without it
     the limit is row-count-only.
     `n_items_hint` — an approximate cardinality from the caller (e.g. one
@@ -292,7 +277,6 @@ def resolve_items(
     few percent more rows than the byte budget assumed.
     """
     has_existing = "is_existing" in items.columns
-    has_exact_hit = "exact_hit" in items.columns
     spark = items.sparkSession
 
     # Budget TWO vectors per collected row: the full-row collect carries both
@@ -301,7 +285,6 @@ def resolve_items(
     # configured byte ceiling at wide embedding dims).
     limit = cfg.effective_broadcast_limit(2 * emb_dim if emb_dim else None)
     rows = None
-    with_id = None
     if n_items is None:
         # Path decision via a count whose plan PRUNES the embedding columns
         # (an unused deterministic ArrowEvalPython projection is removed by
@@ -331,7 +314,6 @@ def resolve_items(
             cfg.inclusive,
             has_existing,
             order_col,
-            has_exact_hit=has_exact_hit,
             link_mode=cfg.link_mode,
             emb_col=emb_col,
         )
@@ -376,16 +358,9 @@ def resolve_items(
             return spark.createDataFrame(out_rows, schema)
 
     # ---- distributed path ----------------------------------------------------
-    if with_id is None:  # n_items was passed in by the caller
-        with_id = items.withColumn("id", F.xxhash64(*key_cols)).localCheckpoint()
-
-    # exact-hit store rows are out of the cosine pool entirely (they still
-    # appear in the output, mapping to themselves via the left join below)
-    cand_input = (
-        with_id.where(~F.col("exact_hit")) if has_exact_hit else with_id
-    )
+    with_id = items.withColumn("id", F.xxhash64(*key_cols)).localCheckpoint()
     pairs = candidate_pairs(
-        cand_input,
+        with_id,
         cfg,
         threshold,
         emb_col=emb_col,

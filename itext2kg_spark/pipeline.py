@@ -13,103 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
-
 from itext2kg_spark.config import PipelineConfig, ATOM
-from itext2kg_spark.extract.distill import distill_pages, extract_main_text
+from itext2kg_spark.extract.distill import distill_pages
 from itext2kg_spark.extract.embed import HashEmbedder
 from itext2kg_spark.extract.facts import split_atomic_facts
 from itext2kg_spark.extract.quintuples import GrammarExtractor, extract_quintuples
 from itext2kg_spark.merge.kg import canonicalize_kg
 from itext2kg_spark.sources.store import KGStore
-
-_SENT_SPLIT = re.compile(r"(?<=[.!?])\s+")
-
-FUSED_SCHEMA = (
-    "url string, obs_ts timestamp, lang string, fact_idx int, fact string,"
-    " subj_name string, subj_label string, pred string, obj_name string,"
-    " obj_label string, t_start array<string>, t_end array<string>"
-)
-
-
-def fused_quintuples(pages: DataFrame, extractor) -> DataFrame:
-    """distill + sentence-split + extract in a single Arrow pass."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "url", "obs_ts", "lang", "fact_idx", "fact", "subj_name",
-                "subj_label", "pred", "obj_name", "obj_label", "t_start",
-                "t_end")}
-            for url, ts, html, lang in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-            ):
-                text = extract_main_text(html)
-                for idx, sent in enumerate(
-                    s for s in (x.strip() for x in _SENT_SPLIT.split(text)) if s
-                ):
-                    for qd in extractor.extract(sent, ts):
-                        out["url"].append(url)
-                        out["obs_ts"].append(ts)
-                        out["lang"].append(lang)
-                        out["fact_idx"].append(idx)
-                        out["fact"].append(sent)
-                        out["subj_name"].append(qd["subj_name"])
-                        out["subj_label"].append(qd["subj_label"])
-                        out["pred"].append(qd["pred"])
-                        out["obj_name"].append(qd["obj_name"])
-                        out["obj_label"].append(qd["obj_label"])
-                        out["t_start"].append(qd["t_start"])
-                        out["t_end"].append(qd["t_end"])
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "warc_ts", "html", "lang").mapInPandas(
-        run, schema=FUSED_SCHEMA
-    )
-
-
-def fused_quintuples_vectorized(pages: DataFrame) -> DataFrame:
-    """distill + sentence-split + grammar-extract in ONE Arrow pass, fully
-    vectorized: html -> text per row (cheap regex), pandas .str.split +
-    explode for the sentence split, then the shared .str.extract batch
-    kernel. One JVM<->Python round-trip instead of three — at high core
-    counts the Arrow serialization traffic is the bandwidth bottleneck, so
-    this is the scaling-friendly shape of the extraction stage."""
-    import pandas as pd
-
-    from itext2kg_spark.extract.quintuples import (
-        _VEC_SCHEMA,
-        _vectorized_extract_pdf,
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            texts = pd.Series(
-                [extract_main_text(h) for h in pdf["html"]], index=pdf.index
-            )
-            sents = texts.str.split(_SENT_SPLIT)
-            base = pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "obs_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "fact": sents,
-                }
-            ).explode("fact", ignore_index=True)
-            base["fact"] = base["fact"].fillna("").str.strip()
-            base = base[base["fact"] != ""]
-            base = base.reset_index(drop=True)
-            base["fact_idx"] = base.groupby("url").cumcount()
-            yield _vectorized_extract_pdf(base)
-
-    return pages.select("url", "warc_ts", "html", "lang").mapInPandas(
-        run, schema=_VEC_SCHEMA
-    )
 
 
 class KGPipeline:
@@ -131,20 +41,12 @@ class KGPipeline:
         self.extraction = extraction
 
     # -- stage views ----------------------------------------------------------
-    def quintuples_from_pages(self, pages: DataFrame, fused: bool = False) -> DataFrame:
-        """pages -> quintuple rows.
-
-        fused=True runs distill+split+extract in ONE mapInPandas pass — one
-        JVM<->Python Arrow round-trip instead of three. Same rows, same
-        schema; the staged path remains for mixing extractors or inspecting
-        intermediate tables.
+    def quintuples_from_pages(self, pages: DataFrame) -> DataFrame:
+        """pages -> quintuple rows: distill, split into atomic facts, then
+        extract (token, vectorized grammar, or the pluggable extractor UDF).
         """
         if self.extraction == "token":
             return self.token_quintuples_from_pages(pages)
-        if fused:
-            if type(self.extractor) is GrammarExtractor:
-                return fused_quintuples_vectorized(pages)
-            return fused_quintuples(pages, self.extractor)
         distilled = distill_pages(pages)
         facts = split_atomic_facts(distilled)
         if type(self.extractor) is GrammarExtractor:

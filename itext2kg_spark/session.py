@@ -12,6 +12,45 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _export_pythonpath() -> str:
+    """Make the engine importable in Spark's Python workers regardless of the
+    caller's cwd (local-mode workers resolve modules via PYTHONPATH, not the
+    driver's sys.path; on a cluster spark-submit --py-files does this job).
+    Returns the resulting PYTHONPATH."""
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if pkg_root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
+        )
+    return os.environ["PYTHONPATH"]
+
+
+def _engine_conf(b: SparkSession.Builder, shuffle_partitions: int):
+    """The session settings every topology shares."""
+    return (
+        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Arrow record batch = the "API batch" of the reference's LLM batching
+        # (langchain_output_parser.py:168-221): extraction/embedding UDFs see
+        # bounded batches.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        # Size scan splits for CPU-heavy UDF stages, not for scan bytes: at
+        # the default 128MB a compact pages table collapses to a handful of
+        # splits and the distill/extract pandas stages run at parallelism ~2.
+        # 16MB keeps split count >= cores for any non-trivial input; on a
+        # 100TB table the split count is huge either way and this only
+        # bounds per-task memory.
+        .config("spark.sql.files.maxPartitionBytes", "16m")
+        .config("spark.sql.files.openCostInBytes", "1m")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+    )
+
+
 def get_spark(
     app_name: str = "itext2kg_spark",
     cores: int | None = None,
@@ -23,16 +62,7 @@ def get_spark(
     spark-submit / SparkConf — local[cores] is only the fallback when none is
     configured, so `spark-submit --master yarn ... run_batch.py` actually
     runs on the cluster instead of silently dropping to single-JVM local."""
-    # Make the engine importable in Spark's Python workers regardless of the
-    # caller's cwd (local-mode workers resolve modules via PYTHONPATH, not the
-    # driver's sys.path; on a cluster spark-submit --py-files does this job).
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pp = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
-        )
-
+    _export_pythonpath()
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -51,23 +81,7 @@ def get_spark(
     if master:
         b = b.master(master)
     b = (
-        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow record batch = the "API batch" of the reference's LLM batching
-        # (langchain_output_parser.py:168-221): extraction/embedding UDFs see
-        # bounded batches.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        # Size scan splits for CPU-heavy UDF stages, not for scan bytes: at
-        # the default 128MB a compact pages table collapses to a handful of
-        # splits and the distill/extract pandas stages run at parallelism ~2.
-        # 16MB keeps split count >= cores for any non-trivial input; on a
-        # 100TB table the split count is huge either way and this only
-        # bounds per-task memory.
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "1m")
+        _engine_conf(b, shuffle_partitions)
         # Heap scales with task slots: a fixed 8g at local[32] is 0.25 GB
         # per concurrent task — far below any real executor provisioning
         # (2-4 GB/core) — and the unified pool starves: measured
@@ -84,8 +98,6 @@ def get_spark(
         # pool for storage; the engine's localCheckpoints are re-computable
         # lineage truncations, so eviction is always safe here.
         .config("spark.memory.storageFraction", "0.3")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -110,10 +122,7 @@ def get_spark_cluster(
     import pyspark
 
     os.environ.setdefault("SPARK_HOME", pyspark.__path__[0])
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pp = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
+    pythonpath = _export_pythonpath()
     if shuffle_partitions is None:
         shuffle_partitions = max(n_executors * cores_per_executor, 8)
     b = (
@@ -122,15 +131,6 @@ def get_spark_cluster(
             f"local-cluster[{n_executors},{cores_per_executor},{executor_mem_mb}]"
         )
         .config("spark.executor.memory", f"{executor_mem_mb - 512}m")
-        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
-    return b.getOrCreate()
+    return _engine_conf(b, shuffle_partitions).getOrCreate()

@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from itext2kg_spark.sources.stream_hw import write_json_atomic
+
 
 class BucketedTableStore:
     """Versioned bucketed materialization of one logical table."""
@@ -65,12 +67,6 @@ class BucketedTableStore:
     def _table(self, version: int) -> str:
         return f"{self.name}_v{version}"
 
-    def _commit(self, version: int) -> None:
-        tmp = self._marker() + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(tmp, self._marker())
-
     # -- io -----------------------------------------------------------------
     def write(self, df: DataFrame, version: int | None = None) -> int:
         """Write a new bucketed version and commit the pointer to it."""
@@ -83,7 +79,7 @@ class BucketedTableStore:
             .option("path", os.path.join(self.root, self._table(version)))
             .saveAsTable(self._table(version))
         )
-        self._commit(version)
+        write_json_atomic(self._marker(), {"version": version})
         if cur is not None and cur != version:
             # previous version stays on disk until explicitly vacuumed; only
             # the catalog entry is dropped (readers resolve via the marker).

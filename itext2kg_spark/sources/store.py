@@ -23,17 +23,14 @@ find_last_completed_batch + cleanup of incomplete later batches.
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from itext2kg_spark.sources.stream_hw import StreamEpochMixin, write_json_atomic
+from itext2kg_spark.sources.stream_hw import SnapshotLog
 
 
-class KGStore(StreamEpochMixin):
+class KGStore(SnapshotLog):
     def __init__(
         self, root: str, bucketed_edges: bool = False, edge_buckets: int = 8
     ):
@@ -49,10 +46,9 @@ class KGStore(StreamEpochMixin):
         the batch id is resolved through THIS store's _COMMITTED markers;
         the bucketed version is read by explicit id, so a crash between the
         bucketed write and the marker leaves the new version invisible."""
-        self.root = root
+        super().__init__(root)
         self.bucketed_edges = bucketed_edges
         self.edge_buckets = edge_buckets
-        os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
 
     def _edge_store(self, spark: SparkSession):
         from hashlib import md5
@@ -70,27 +66,6 @@ class KGStore(StreamEpochMixin):
             buckets=self.edge_buckets,
         )
 
-    # ---- snapshot discovery -------------------------------------------------
-    def _snap_dir(self, batch_id: int) -> str:
-        return os.path.join(self.root, "snapshots", f"batch={batch_id}")
-
-    def committed_batches(self) -> list[int]:
-        out = []
-        snaps = os.path.join(self.root, "snapshots")
-        for d in os.listdir(snaps):
-            m = re.fullmatch(r"batch=(\d+)", d)
-            if m and os.path.exists(os.path.join(snaps, d, "_COMMITTED")):
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def last_committed(self) -> int | None:
-        b = self.committed_batches()
-        return b[-1] if b else None
-
-    def next_batch_id(self) -> int:
-        last = self.last_committed()
-        return 0 if last is None else last + 1
-
     # ---- read / write -------------------------------------------------------
     def write_snapshot(
         self,
@@ -100,26 +75,22 @@ class KGStore(StreamEpochMixin):
         metrics: dict | None = None,
         lineage: DataFrame | None = None,
     ) -> None:
-        d = self._snap_dir(batch_id)
-        if os.path.exists(d):  # partial snapshot from a crashed run
-            shutil.rmtree(d)
-        entities.write.mode("overwrite").parquet(os.path.join(d, "entities"))
-        if self.bucketed_edges:
-            # versioned bucketed table keyed by this batch id; commit is
-            # still THIS store's marker below (see __init__)
-            self._edge_store(entities.sparkSession).write(
-                edges, version=batch_id
-            )
-        else:
-            edges.write.mode("overwrite").parquet(os.path.join(d, "edges"))
-        if lineage is not None:
-            # per-partition lineage of the batch input (north rule): which
-            # input partitions contributed, row counts, distinct keys
-            lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
-        write_json_atomic(
-            os.path.join(d, "_COMMITTED"),
-            {"batch_id": batch_id, "metrics": metrics or {}},
-        )
+        with self._commit_snapshot(batch_id, metrics) as d:
+            entities.write.mode("overwrite").parquet(os.path.join(d, "entities"))
+            if self.bucketed_edges:
+                # versioned bucketed table keyed by this batch id; commit is
+                # still THIS store's marker (see __init__)
+                self._edge_store(entities.sparkSession).write(
+                    edges, version=batch_id
+                )
+            else:
+                edges.write.mode("overwrite").parquet(os.path.join(d, "edges"))
+            if lineage is not None:
+                # per-partition lineage of the batch input (north rule): which
+                # input partitions contributed, row counts, distinct keys
+                lineage.write.mode("overwrite").parquet(
+                    os.path.join(d, "lineage")
+                )
         # streaming high-water cache, AFTER the commit marker (see
         # last_stream_epoch): a crash between the two writes leaves the
         # cache stale-low, which the bounded catch-up scan repairs — replay
@@ -148,7 +119,3 @@ class KGStore(StreamEpochMixin):
         else:
             edges = spark.read.parquet(os.path.join(d, "edges"))
         return (spark.read.parquet(os.path.join(d, "entities")), edges)
-
-    def snapshot_metrics(self, batch_id: int) -> dict:
-        with open(os.path.join(self._snap_dir(batch_id), "_COMMITTED")) as f:
-            return json.load(f)

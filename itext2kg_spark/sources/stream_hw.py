@@ -1,4 +1,13 @@
-"""Per-stream high-water tracking shared by KGStore and CorpusStore.
+"""The snapshot log under KGStore and CorpusStore: marker-gated batch
+directories plus per-stream high-water tracking.
+
+    root/snapshots/batch=<i>/...         (the store's data)
+                            /_COMMITTED  (written last, atomically)
+
+A directory counts only once its `_COMMITTED` marker exists; a partial
+directory left by a crash is invisible and is removed before the batch id is
+written again. The same scan and commit serve any other `<name>=<i>` family
+of write-once directories a store keeps (CorpusStore's compacted bases).
 
 foreachBatch can replay a micro-batch after a failure, and a stream's epoch
 ids restart at 0 whenever it gets a fresh checkpoint dir — so replay
@@ -11,11 +20,8 @@ The authoritative record is each snapshot's _COMMITTED metadata, written
 atomically with the snapshot — a crash can only ever REPLAY a batch, never
 skip one. The per-stream high-water file is a cache that bounds the scan to
 snapshots newer than the cached batch id (normally zero; exactly the
-crash-window ones after a marker-then-crash).
-
-Host classes provide: ``self.root``, ``committed_batches() -> list[int]``,
-and ``snapshot_metrics(batch_id) -> dict`` whose ``"metrics"`` sub-dict may
-carry ``stream_key`` / ``stream_epoch``.
+crash-window ones after a marker-then-crash). A snapshot's marker
+``"metrics"`` sub-dict may carry ``stream_key`` / ``stream_epoch``.
 """
 
 from __future__ import annotations
@@ -23,6 +29,9 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
+import shutil
+from contextlib import contextmanager
 
 
 def write_json_atomic(path: str, obj) -> None:
@@ -44,7 +53,65 @@ def write_json_atomic(path: str, obj) -> None:
         os.close(dfd)
 
 
-class StreamEpochMixin:
+def committed_ids(parent: str, prefix: str) -> list[int]:
+    """Sorted ids `i` of the `<parent>/<prefix>=<i>` directories that hold a
+    `_COMMITTED` marker ([] when `parent` does not exist)."""
+    try:
+        names = os.listdir(parent)
+    except FileNotFoundError:
+        return []
+    out = []
+    for d in names:
+        m = re.fullmatch(rf"{prefix}=(\d+)", d)
+        if m and os.path.exists(os.path.join(parent, d, "_COMMITTED")):
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
+@contextmanager
+def committing(d: str, marker: dict):
+    """Write-once directory commit: remove a partial `d` left by a crashed
+    run, let the caller write its data into `d`, then write the `_COMMITTED`
+    marker atomically. An exception in the body leaves no marker."""
+    if os.path.exists(d):
+        shutil.rmtree(d)
+    yield d
+    write_json_atomic(os.path.join(d, "_COMMITTED"), marker)
+
+
+class SnapshotLog:
+    """Base of KGStore and CorpusStore: the batch snapshot directories under
+    `root`, their commit, and the per-stream high-water cache."""
+
+    def __init__(self, root: str):
+        self.root = root
+        os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
+
+    def _snap_dir(self, batch_id: int) -> str:
+        return os.path.join(self.root, "snapshots", f"batch={batch_id}")
+
+    def committed_batches(self) -> list[int]:
+        return committed_ids(os.path.join(self.root, "snapshots"), "batch")
+
+    def last_committed(self) -> int | None:
+        b = self.committed_batches()
+        return b[-1] if b else None
+
+    def next_batch_id(self) -> int:
+        last = self.last_committed()
+        return 0 if last is None else last + 1
+
+    def snapshot_metrics(self, batch_id: int) -> dict:
+        with open(os.path.join(self._snap_dir(batch_id), "_COMMITTED")) as f:
+            return json.load(f)
+
+    def _commit_snapshot(self, batch_id: int, metrics: dict | None):
+        """`committing` for snapshot `batch_id`, marker carrying `metrics`."""
+        return committing(
+            self._snap_dir(batch_id),
+            {"batch_id": batch_id, "metrics": metrics or {}},
+        )
+
     def _stream_hw_path(self, stream_key: str) -> str:
         h = hashlib.sha256(stream_key.encode("utf-8")).hexdigest()[:24]
         return os.path.join(self.root, "streams", f"{h}.json")

@@ -14,9 +14,10 @@ Exit code 1 if any hard flag fires.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from itext2kg_spark.session import get_spark  # noqa: E402

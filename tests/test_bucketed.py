@@ -151,3 +151,24 @@ def test_write_explicit_current_version_stays_registered(spark, store):
     assert store.current_version() == 0
     assert spark.catalog.tableExists(store._table(0))
     assert store.load().count() == 2
+
+
+def test_pointer_write_crash_keeps_previous_version(spark, store, monkeypatch):
+    """A crash while the version pointer is written (here: the rename of its
+    fsynced tmp file fails) leaves the previous version current — a torn
+    pointer must never make the store look empty."""
+    import os
+
+    df = spark.createDataFrame(EDGES, SCHEMA)
+    assert store.write(df) == 0
+
+    def crash(src, dst):
+        raise OSError("crash before the pointer rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError):
+            store.write(df.limit(1))
+    assert store.current_version() == 0
+    assert store.load().count() == len(EDGES)
+    spark.sql(f"DROP TABLE IF EXISTS {store._table(1)}")

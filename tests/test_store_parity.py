@@ -5,10 +5,6 @@ the store (atom/graph_matching/matcher.py:65-94), so two store entities can
 never merge — a property round 1 violated: a single batch entity x with
 cosine >= θ to two store entities e1, e2 bridged them into one component
 (e1 <- x -> e2), demoting one store row and dangling its edges.
-
-Also covers the exact-match pool exclusion (matcher.py:53-63): a store row
-claimed by an exact batch match leaves the cosine pool, so other batch
-entities cannot similarity-merge onto it.
 """
 
 import math
@@ -26,15 +22,9 @@ def _vec(angle_deg: float) -> list[float]:
 
 
 def _items(spark, rows):
-    # rows: (name, label, angle, is_existing[, exact_hit])
-    has_hit = len(rows[0]) == 5
-    data = [
-        (r[0], r[1], _vec(r[2]), bool(r[3])) + ((bool(r[4]),) if has_hit else ())
-        for r in rows
-    ]
+    # rows: (name, label, angle, is_existing)
+    data = [(r[0], r[1], _vec(r[2]), bool(r[3])) for r in rows]
     schema = "name string, label string, emb array<double>, is_existing boolean"
-    if has_hit:
-        schema += ", exact_hit boolean"
     return spark.createDataFrame(data, schema)
 
 
@@ -73,31 +63,6 @@ def test_batch_entity_cannot_bridge_two_store_entities(spark, path):
     # bridging both (the two sims are equal up to rounding, so either store
     # row is a valid argmax)
     assert canon[("x", "L")] in {("e1", "L"), ("e2", "L")}
-
-
-@pytest.mark.parametrize("path", ["driver", "distributed"])
-def test_exact_hit_store_row_leaves_cosine_pool(spark, path):
-    cfg = (
-        MatchConfig()
-        if path == "driver"
-        else MatchConfig(broadcast_limit=0, candidate_method="broadcast")
-    )
-    # s was exactly matched by some batch row this batch (exact_hit=True).
-    # Batch row y is closest to s (cos=0.996) but must fall to t (cos=0.94):
-    # the reference removes s from unmatched_entities2 before the cosine pass.
-    rows = [
-        ("s", "L", 0.0, True, True),
-        ("t", "L", 25.0, True, False),
-        ("y", "L", 5.0, False, False),
-    ]
-    resolved = resolve_items(
-        _items(spark, rows), cfg, threshold=0.8, key_cols=["name", "label"],
-        emb_col="emb",
-    )
-    canon = _canon_map(resolved)
-    assert canon[("s", "L")] == ("s", "L")
-    assert canon[("t", "L")] == ("t", "L")
-    assert canon[("y", "L")] == ("t", "L")
 
 
 def test_incremental_store_edges_never_dangle(spark):

@@ -85,53 +85,6 @@ def test_array_parse_no_fallback_flag(spark):
     assert row["p"] == [_dateutil_utc("2025-01-01")]
 
 
-def test_array_inline_variant_matches_expression_form(spark):
-    """parse_timestamp_array_inline (single-pass row-gated, fast arrays
-    materialized as columns) must be row-identical to the expression form
-    across fast/fuzzy/garbage/empty/null shapes, on BOTH array columns."""
-    from itext2kg_spark.functions.timeparse import parse_timestamp_array_inline
-
-    arrays = [
-        ["July 17th, 2025", "17.07.2025"],
-        ["2025-01-01", "July 17th, 2025", "nope"],
-        ["2025-01-01", "2025-02-02"],
-        [],
-        None,
-    ]
-    rows = [(i, a, list(reversed(a)) if a else a) for i, a in enumerate(arrays)]
-    df = spark.createDataFrame(rows, "id long, a array<string>, b array<string>")
-    got = {
-        r["id"]: (r["a"], r["b"])
-        for r in parse_timestamp_array_inline(df, ["a", "b"]).collect()
-    }
-    exp = {
-        r["id"]: (r["a"], r["b"])
-        for r in df.select(
-            "id",
-            parse_timestamp_array(F.col("a")).alias("a"),
-            parse_timestamp_array(F.col("b")).alias("b"),
-        ).collect()
-    }
-    assert got == exp
-
-    nf = {
-        r["id"]: r["a"]
-        for r in parse_timestamp_array_inline(
-            df, ["a"], use_dateutil_fallback=False
-        ).collect()
-    }
-    nf_exp = {
-        r["id"]: r["a"]
-        for r in df.select(
-            "id",
-            parse_timestamp_array(
-                F.col("a"), use_dateutil_fallback=False
-            ).alias("a"),
-        ).collect()
-    }
-    assert nf == nf_exp
-
-
 def test_fast_path_extensions_match_dateutil_exhaustively(spark):
     """The dotted-triple and ordinal-suffix fast formats (appended to
     _fast_parse so they only see strings the original list rejected) must
@@ -167,6 +120,9 @@ def test_fast_path_extensions_match_dateutil_exhaustively(spark):
         "13.13.2025", "12.31.99", "05.07.25", "July 17 th, 2025",
         "July 17th", "17th July", "1.2.3", "10.10.10.10",
         "August 1st, 2024 12:30:00",
+        # years below 100 (year 0 included) must reach dateutil
+        "01.01.0000", "0000-01-01", "January 1 0050", "July 17th, 0099",
+        "17.07.0099", "01.01.0001",
     ]
     df = spark.createDataFrame([(c,) for c in cases], ["s"])
     got = {

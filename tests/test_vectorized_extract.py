@@ -23,24 +23,3 @@ def test_vectorized_extraction_parity(spark):
     ra, rb = sorted(map(key, a.collect())), sorted(map(key, b.collect()))
     assert ra == rb and len(ra) > 100
 
-
-def test_fused_vectorized_row_parity(spark):
-    """fused_quintuples_vectorized (single Arrow pass) emits exactly the
-    staged pipeline's rows, temporal arrays included."""
-    from itext2kg_spark.pipeline import KGPipeline
-    from itext2kg_spark.sources.pages import synth_pages
-
-    pipe = KGPipeline()
-    pages = synth_pages(spark, 120, seed=23).localCheckpoint()
-    cols = ["url", "fact_idx", "fact", "subj_name", "subj_label", "pred",
-            "obj_name", "obj_label"]
-
-    def rows(df):
-        return sorted(
-            tuple(r[c] for c in cols) + (tuple(r["t_start"]), tuple(r["t_end"]))
-            for r in df.collect()
-        )
-
-    staged = rows(pipe.quintuples_from_pages(pages))
-    fused = rows(pipe.quintuples_from_pages(pages, fused=True))
-    assert staged == fused and len(staged) > 100
