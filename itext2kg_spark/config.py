@@ -134,15 +134,6 @@ class PipelineConfig:
     mode: str = "atom"
     # shuffle partitioning for the merge stages; None = leave session default
     shuffle_partitions: int | None = None
-    # Two-phase salted edge aggregation: >1 spreads each canonical triple's
-    # list accumulation over this many salt buckets (partial flatten per
-    # bucket, final flatten+sort per triple). The final edge groupBy is the
-    # one aggregation where map-side partial combine does NOT shrink data
-    # (collect_list carries every element), so a hyper-re-observed edge —
-    # one (src, pred, dst) with 10^8 mentions in a crawl — funnels its whole
-    # list through a single reduce task. Off by default: below extreme skew
-    # the plain partial-agg groupBy is one shuffle instead of two.
-    edge_salt: int = 0
 
 
 ATOM = PipelineConfig()

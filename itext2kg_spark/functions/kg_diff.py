@@ -5,9 +5,7 @@ An incremental KG (store snapshots per batch, sources/store.py) needs
 appeared, which disappeared, which gained observations. That read is one
 full outer join on the canonical key with three codegen'd comparisons —
 no iteration, no UDF — and it pushes the key columns only, so at 100 TB
-it is two snapshot scans plus a single co-partitioned shuffle (free when
-both versions come from the same bucketed store, sources/bucketed.py,
-whose bucket layout both sides share).
+it is two snapshot scans plus one shuffle of the key columns.
 
 change_type: 'added' (key only in new), 'removed' (key only in old),
 'changed' (key in both, n_obs differs). Unchanged edges are dropped —

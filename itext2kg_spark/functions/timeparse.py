@@ -20,6 +20,8 @@ is — run hosts at TZ=UTC for bit-parity).
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,37 +42,51 @@ _FAST_FORMATS = [
 # a small set of date surface forms across millions of mentions, so dateutil
 # (~30-50us per parse) should run once per DISTINCT string per worker, not
 # once per element — the same worker-lifetime bounded-cache pattern as the
-# simhash token cache (guide §4.5: heavyweight per-item work once). For a
-# fully-specified string the memo changes nothing (its dateutil parse is
-# deterministic). An underspecified one ("July 17th", no year) takes its
-# missing fields from the current date, so a worker that outlives a day or
-# year boundary keeps serving its first parse where the reference would
-# re-read the clock. The bound caps worker memory on adversarial corpora
-# with unbounded distinct strings.
-_DATEUTIL_CACHE: dict[str, float | None] = {}
+# simhash token cache (guide §4.5: heavyweight per-item work once). Only a
+# clock-independent parse is memoized. An underspecified string ("July 17th",
+# "Jan 31", "10:30") takes its missing fields from today's date, so a memo of
+# it would outlive a day or year boundary; such a key is stored as
+# _CLOCK_DEPENDENT and re-parsed against the clock each time, as the
+# reference does. The bound caps worker memory on adversarial corpora with
+# unbounded distinct strings.
+_DATEUTIL_CACHE: dict[str, object] = {}
 _DATEUTIL_CACHE_MAX = 1 << 20
+_CLOCK_DEPENDENT = object()
+# A string parses the same under both defaults iff it names its own year,
+# month and day (time fields default to midnight, as dateutil's own default
+# does). The leap/non-leap pair tells "Feb 29" apart; days 1 and 9 are a
+# week apart so a bare weekday ("2000 Jan Monday") lands on different dates.
+_PROBE_DEFAULTS = (datetime(2000, 1, 1), datetime(2001, 2, 9))
+
+
+def _dateutil_parse(key: str, default: datetime | None = None) -> float | None:
+    """dateutil-parse one string to epoch seconds (None on failure); naive
+    results are read as UTC."""
+    from dateutil import parser as dparser
+
+    try:
+        dt = dparser.parse(key, default=default)
+        if dt.tzinfo is None:
+            dt = dt.replace(tzinfo=timezone.utc)
+        return dt.timestamp()
+    except Exception:  # noqa: BLE001 — reference skips unparseable strings
+        return None
 
 
 def _dateutil_epoch_one(v) -> float | None:
-    """dateutil-parse one string to epoch seconds (None on failure), memoized."""
-    from datetime import timezone
-
-    from dateutil import parser as dparser
-
+    """dateutil-parse one string to epoch seconds (None on failure), memoized
+    when the result cannot depend on the current date."""
     key = str(v)
-    try:
-        return _DATEUTIL_CACHE[key]
-    except KeyError:
-        pass
-    try:
-        dt = dparser.parse(key)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        out = dt.timestamp()
-    except Exception:  # noqa: BLE001 — reference skips unparseable strings
-        out = None
+    if key in _DATEUTIL_CACHE:
+        hit = _DATEUTIL_CACHE[key]
+        return _dateutil_parse(key) if hit is _CLOCK_DEPENDENT else hit
+    a, b = (_dateutil_parse(key, d) for d in _PROBE_DEFAULTS)
+    if a == b:
+        out, memo = a, a
+    else:
+        out, memo = _dateutil_parse(key), _CLOCK_DEPENDENT
     if len(_DATEUTIL_CACHE) < _DATEUTIL_CACHE_MAX:
-        _DATEUTIL_CACHE[key] = out
+        _DATEUTIL_CACHE[key] = memo
     return out
 
 

@@ -118,42 +118,6 @@ def embed_entities(
     )
 
 
-def merge_edges_join(stored: DataFrame, batch: DataFrame) -> DataFrame:
-    """Canonical-key merge of batch-aggregated edges into a stored edge
-    table as a FULL OUTER join (counts are list lengths here; list columns
-    concatenate and re-sort). Semantically identical to the union+groupBy
-    path — array_sort over the concat of two per-side-sorted lists equals
-    array_sort over the flattened multiset — but expressed as a join so a
-    bucketed stored side is read in place: only the (batch-sized) side
-    shuffles. Plain equality keys, NOT eqNullSafe: null-safe keys are
-    rewritten into expressions that cannot line up with the table's
-    bucketing (see BucketedTableStore.merge_plan); canonical keys are
-    non-null by construction."""
-    s, u = stored.alias("s"), batch.alias("u")
-    cond = [F.col(f"s.{k}") == F.col(f"u.{k}") for k in EDGE_GROUP_KEYS]
-    return s.join(u, cond, "full_outer").select(
-        *[
-            F.coalesce(F.col(f"s.{k}"), F.col(f"u.{k}")).alias(k)
-            for k in EDGE_GROUP_KEYS
-        ],
-        *[
-            F.array_sort(
-                F.concat(
-                    F.coalesce(
-                        F.col(f"s.{c}"),
-                        F.array().cast(stored.schema[c].dataType),
-                    ),
-                    F.coalesce(
-                        F.col(f"u.{c}"),
-                        F.array().cast(stored.schema[c].dataType),
-                    ),
-                )
-            ).alias(c)
-            for c in EDGE_LIST_COLS
-        ],
-    )
-
-
 def _resolve_both_driver(q: DataFrame, cfg: PipelineConfig, embedder):
     """One-job driver-path resolution of entities AND predicates for fresh
     batches: a kind-tagged 3-way explode of the (checkpointed) quintuple
@@ -287,18 +251,18 @@ def canonicalize_kg(
     """quintuples(url, obs_ts, fact, subj_*, pred, obj_*, t_start, t_end)
     -> (entities, edges) canonical DataFrames.
 
-    existing_edges_merge: "union" (default) unions stored edge rows into the
-    mention stream before the wide groupBy — one aggregation, both sides
-    shuffle. "join" aggregates the batch alone and FULL-OUTER-joins the
-    stored side on the canonical key (merge_edges_join) — the right mode
-    when the stored side is a bucketed table (KGStore(bucketed_edges=True)),
-    where the join reads stored buckets in place and ONLY the batch side
-    shuffles. Outputs are identical (equivalence-tested).
+    Stored edge rows are unioned into the batch's mention stream before
+    the one edge groupBy; existing_edges_merge="union" names that merge
+    and is the only accepted value.
 
     entities: name, label, embedding array<float>
     edges:    src_name, src_label, pred, dst_name, dst_label,
               t_obs/t_start/t_end array<double>, atomic_facts array<string>
     """
+    if existing_edges_merge != "union":
+        raise ValueError(
+            f"existing_edges_merge must be 'union', got {existing_edges_merge!r}"
+        )
     # Materialize the quintuple mention table once — it feeds entity-mention
     # distinct, predicate distinct, and the final remap; recomputing the
     # distill/extract UDF lineage per action would triple the extraction cost
@@ -480,43 +444,14 @@ def canonicalize_kg(
             F.array(F.col("fact")).alias("atomic_facts"),
         )
     )
-    if existing_edges is not None and existing_edges_merge == "union":
+    if existing_edges is not None:
         mentions = mentions.unionByName(
             existing_edges.select(*EDGE_GROUP_KEYS, *EDGE_LIST_COLS)
         )
-
-    if cfg.edge_salt > 1:
-        # Two-phase skew-safe list accumulation (north rule: salted
-        # repartition for hot keys). Salt is deterministic per mention (hash
-        # of the observation stamp + provenance — the fields that VARY within
-        # a hot edge), so one hyper-re-observed triple spreads over
-        # cfg.edge_salt reduce tasks in phase 1; phase 2 combines the
-        # <= edge_salt partial lists per triple. Output is identical to the
-        # single-phase path: the sort happens once, over the final multiset.
-        salt = F.pmod(
-            F.xxhash64(F.col("t_obs"), F.col("atomic_facts")),
-            F.lit(cfg.edge_salt),
-        )
-        agg_input = (
-            mentions.withColumn("__salt", salt)
-            .groupBy(*EDGE_GROUP_KEYS, "__salt")
-            .agg(
-                *[
-                    F.flatten(F.collect_list(c)).alias(c)
-                    for c in EDGE_LIST_COLS
-                ]
-            )
-        )
-    else:
-        agg_input = mentions
-    edges = agg_input.groupBy(*EDGE_GROUP_KEYS).agg(
+    edges = mentions.groupBy(*EDGE_GROUP_KEYS).agg(
         *[
             F.array_sort(F.flatten(F.collect_list(c))).alias(c)
             for c in EDGE_LIST_COLS
         ]
     )
-    if existing_edges is not None and existing_edges_merge == "join":
-        edges = merge_edges_join(
-            existing_edges.select(*EDGE_GROUP_KEYS, *EDGE_LIST_COLS), edges
-        )
     return entities, edges

@@ -91,7 +91,6 @@ class KGPipeline:
         pages: DataFrame,
         existing_entities: DataFrame | None = None,
         existing_edges: DataFrame | None = None,
-        existing_edges_merge: str = "union",
     ) -> tuple[DataFrame, DataFrame]:
         q = self.quintuples_from_pages(pages)
         return canonicalize_kg(
@@ -100,7 +99,6 @@ class KGPipeline:
             self.embedder,
             existing_entities=existing_entities,
             existing_edges=existing_edges,
-            existing_edges_merge=existing_edges_merge,
             # the token extractor emits literal empty temporal arrays, so
             # the timestamp parse collapses to typed empty literals
             temporal_empty=self.extraction == "token",
@@ -114,24 +112,22 @@ class KGPipeline:
         checkpoint (atom/atom.py:196-208 + testing_atom.py batch loop). On a
         cluster this is an Iceberg MERGE INTO + snapshot commit.
         """
-        spark = pages.sparkSession
-        existing = store.load(spark)
-        ents_prev, edges_prev = existing if existing else (None, None)
-        # a bucketed store serves edges_prev as a bucketed table scan — the
-        # join-form merge then reads stored buckets in place and only the
-        # batch side shuffles (plan-pinned in tests/test_bucketed.py)
-        merge_mode = "join" if getattr(store, "bucketed_edges", False) else "union"
-        entities, edges = self.build_graph(
-            pages, ents_prev, edges_prev, existing_edges_merge=merge_mode
-        )
+        return self.commit_batch(pages, store, {"n_pages": pages.count()})
 
+    def commit_batch(self, pages: DataFrame, store: KGStore, metrics: dict) -> int:
+        """Load the store's last snapshot, merge `pages` into it and commit
+        the result as the next batch with `metrics` in its `_COMMITTED`
+        marker; returns the batch id. The one commit path of `run_batch`
+        and the streaming front end."""
+        existing = store.load(pages.sparkSession)
+        ents_prev, edges_prev = existing if existing else (None, None)
+        entities, edges = self.build_graph(pages, ents_prev, edges_prev)
         batch_id = store.next_batch_id()
-        n_pages = pages.count()
         store.write_snapshot(
             batch_id,
             entities,
             edges,
-            metrics={"n_pages": n_pages},
+            metrics=metrics,
             lineage=partition_lineage(pages).withColumn(
                 "batch_id", F.lit(batch_id)
             ),

@@ -31,41 +31,6 @@ from itext2kg_spark.sources.stream_hw import SnapshotLog
 
 
 class KGStore(SnapshotLog):
-    def __init__(
-        self, root: str, bucketed_edges: bool = False, edge_buckets: int = 8
-    ):
-        """bucketed_edges=True persists each snapshot's EDGE table through
-        BucketedTableStore (hash-bucketed + sorted by the canonical edge
-        key) instead of plain parquet. KGPipeline.run_batch detects the
-        flag and switches the incremental merge to its join form
-        (merge_edges_join), so the stored side — the one table that grows
-        with corpus age — is read bucket-aligned and never re-shuffles;
-        only the batch side exchanges (plan-pinned in tests). Entity
-        snapshots stay parquet (the entity merge needs the full similarity
-        resolution pass, not a key-equi merge). Atomicity is unchanged:
-        the batch id is resolved through THIS store's _COMMITTED markers;
-        the bucketed version is read by explicit id, so a crash between the
-        bucketed write and the marker leaves the new version invisible."""
-        super().__init__(root)
-        self.bucketed_edges = bucketed_edges
-        self.edge_buckets = edge_buckets
-
-    def _edge_store(self, spark: SparkSession):
-        from hashlib import md5
-
-        from itext2kg_spark.sources.bucketed import BucketedTableStore
-
-        # catalog table names must be unique per store root (several stores
-        # can live in one session, e.g. under pytest)
-        tag = md5(os.path.abspath(self.root).encode()).hexdigest()[:10]
-        return BucketedTableStore(
-            spark,
-            os.path.join(self.root, "bucketed_edges"),
-            name=f"kg_edges_{tag}",
-            keys=("src_name", "src_label", "pred", "dst_name", "dst_label"),
-            buckets=self.edge_buckets,
-        )
-
     # ---- read / write -------------------------------------------------------
     def write_snapshot(
         self,
@@ -77,14 +42,7 @@ class KGStore(SnapshotLog):
     ) -> None:
         with self._commit_snapshot(batch_id, metrics) as d:
             entities.write.mode("overwrite").parquet(os.path.join(d, "entities"))
-            if self.bucketed_edges:
-                # versioned bucketed table keyed by this batch id; commit is
-                # still THIS store's marker (see __init__)
-                self._edge_store(entities.sparkSession).write(
-                    edges, version=batch_id
-                )
-            else:
-                edges.write.mode("overwrite").parquet(os.path.join(d, "edges"))
+            edges.write.mode("overwrite").parquet(os.path.join(d, "edges"))
             if lineage is not None:
                 # per-partition lineage of the batch input (north rule): which
                 # input partitions contributed, row counts, distinct keys
@@ -114,8 +72,7 @@ class KGStore(SnapshotLog):
         if batch_id is None:
             return None
         d = self._snap_dir(batch_id)
-        if self.bucketed_edges:
-            edges = self._edge_store(spark).load_version(batch_id)
-        else:
-            edges = spark.read.parquet(os.path.join(d, "edges"))
-        return (spark.read.parquet(os.path.join(d, "entities")), edges)
+        return (
+            spark.read.parquet(os.path.join(d, "entities")),
+            spark.read.parquet(os.path.join(d, "edges")),
+        )

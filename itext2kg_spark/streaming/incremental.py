@@ -4,7 +4,7 @@ The reference has no streaming — its incrementality is a batch loop over
 observation dates with pickle checkpoints (evaluation/latency/testing_atom.py:
 294-526). The natural Spark expression is `readStream` over the pages source
 with `foreachBatch` invoking the same batch merge used everywhere else
-(KGPipeline.run_batch → canonicalize → snapshot commit). No stateful
+(KGPipeline.commit_batch → canonicalize → snapshot commit). No stateful
 streaming operators are needed: late pages simply merge in a later batch and
 their warc_ts lands in the edge's t_obs list (SURVEY.md §2.8 — the t_obs-
 ordered batch loop IS the stream semantics).
@@ -23,9 +23,8 @@ dropped the first N micro-batches of a new stream as "replays".
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from itext2kg_spark.pipeline import KGPipeline, partition_lineage
+from itext2kg_spark.pipeline import KGPipeline
 from itext2kg_spark.sources.store import KGStore
 
 
@@ -74,18 +73,9 @@ def run_stream_batch(
         return False  # replayed micro-batch after restart — already merged
     if batch_df.isEmpty():
         return False
-    spark = batch_df.sparkSession
-    existing = store.load(spark)
-    ents_prev, edges_prev = existing if existing else (None, None)
-    entities, edges = pipe.build_graph(batch_df, ents_prev, edges_prev)
-    batch_id = store.next_batch_id()
-    store.write_snapshot(
-        batch_id,
-        entities,
-        edges,
-        metrics={"stream_key": stream_key, "stream_epoch": int(epoch_id)},
-        lineage=partition_lineage(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        ),
+    pipe.commit_batch(
+        batch_df,
+        store,
+        {"stream_key": stream_key, "stream_epoch": int(epoch_id)},
     )
     return True

@@ -59,7 +59,12 @@ def _load(dotted: str, path: str):
     spec = importlib.util.spec_from_file_location(dotted, path)
     mod = importlib.util.module_from_spec(spec)
     sys.modules[dotted] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        # a half-built module left here would be served by the next call
+        del sys.modules[dotted]
+        raise
     return mod
 
 

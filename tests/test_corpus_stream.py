@@ -122,7 +122,7 @@ def test_corpus_stream_replay_safe_by_dedup(spark, tmp_path):
 
 
 def test_corpus_stream_watermark_o1(spark, tmp_path):
-    """The shared StreamEpochMixin gives CorpusStore the same O(1)
+    """The shared SnapshotLog gives CorpusStore the same O(1)
     high-water read as KGStore: with the cache current, no snapshot
     metadata file is opened."""
     store = CorpusStore(str(tmp_path / "c5"))

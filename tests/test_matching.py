@@ -218,27 +218,6 @@ def test_distributed_leader_refuses_above_sort_limit(spark):
     assert ok.count() == 3
 
 
-def test_salted_edge_aggregation_identical_output(spark):
-    """cfg.edge_salt > 1 (two-phase salted list accumulation for hot edges)
-    must produce byte-identical edges to the single-phase default — the sort
-    runs once over the final multiset, so bucketing cannot reorder it."""
-    from dataclasses import replace
-
-    from itext2kg_spark.config import ATOM
-    from itext2kg_spark.pipeline import KGPipeline
-    from itext2kg_spark.sources.pages import synth_pages
-
-    pages = synth_pages(spark, 80, seed=17).localCheckpoint()
-    base = sorted(map(tuple, KGPipeline(ATOM).build_graph(pages)[1].collect()))
-    salted = sorted(
-        map(
-            tuple,
-            KGPipeline(replace(ATOM, edge_salt=8)).build_graph(pages)[1].collect(),
-        )
-    )
-    assert base == salted and len(base) > 0
-
-
 def test_driver_and_distributed_paths_equivalent_randomized(spark):
     """Randomized equivalence of the two physical resolution strategies: the
     driver BLAS path and the LSH/CC distributed path must induce the same

@@ -210,3 +210,15 @@ def test_kg_commit_marker_is_atomic(spark, tmp_path, monkeypatch):
     assert p.run_batch(pages, store) == 0
     assert store.committed_batches() == [0]
     assert store.load(spark)[1].count() > 0
+    assert store.snapshot_metrics(0) == {"batch_id": 0, "metrics": {"n_pages": 5}}
+
+
+def test_canonicalize_kg_accepts_only_the_union_edge_merge(spark):
+    """Stored edges merge into a batch one way, the union before the edge
+    groupBy; any other `existing_edges_merge` is refused up front."""
+    from itext2kg_spark.config import ATOM
+    from itext2kg_spark.merge.kg import canonicalize_kg
+
+    q = spark.range(1)
+    with pytest.raises(ValueError, match="existing_edges_merge"):
+        canonicalize_kg(q, ATOM, None, existing_edges_merge="join")

@@ -133,3 +133,21 @@ def test_fast_path_extensions_match_dateutil_exhaustively(spark):
     }
     for c in cases:
         assert got[c] == _dateutil_utc(c), f"{c!r}: {got[c]} != {_dateutil_utc(c)}"
+
+
+def test_dateutil_memo_keeps_only_clock_independent_parses():
+    """The fallback memo stores a parse only when no field of it comes from
+    today's date; an underspecified string is re-parsed against the clock
+    on every occurrence, so a long-lived worker never serves a stale day."""
+    from itext2kg_spark.functions import timeparse as tp
+
+    fixed = ["2025-07-17", "17.07.2025", "2025-07-17T10:00Z", "not a date"]
+    clock = ["July 17th", "July 2025", "Jan 31", "10:30", "Feb 29", "2000 Jan Monday"]
+    for s in fixed + clock:
+        tp._DATEUTIL_CACHE.pop(s, None)
+        for _ in range(2):  # first occurrence, then the memo's answer
+            assert tp._dateutil_epoch_one(s) == _dateutil_utc(s), s
+    for s in fixed:
+        assert tp._DATEUTIL_CACHE[s] == _dateutil_utc(s), s
+    for s in clock:
+        assert not isinstance(tp._DATEUTIL_CACHE.get(s), float), s
