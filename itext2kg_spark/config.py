@@ -26,7 +26,6 @@ class MatchConfig:
     inclusive: bool = True  # ATOM: sim >= thr; star mode: sim > thr
     # Cluster linking: "best" connects each item only to its argmax match
     # (parity with the reference's per-item argmax, matcher.py:73-94);
-    # "all" links every pair >= threshold (denser, pure transitive closure);
     # "leader" reproduces the reference's SEQUENTIAL fold exactly (each item
     # matches only surviving leaders, in first_seen order — absorbed surface
     # forms leave the pool, so similarity chains never over-merge). Both
@@ -108,6 +107,19 @@ class MatchConfig:
             self.cand_broadcast_rows,
             self.broadcast_limit_bytes // (emb_dim * 8),
         )
+
+    def __post_init__(self):
+        # Both resolve paths honour exactly these values; anything else would
+        # silently take some other path's behaviour.
+        if self.link_mode not in ("best", "leader"):
+            raise ValueError(
+                f"link_mode must be 'best' or 'leader', got {self.link_mode!r}"
+            )
+        if self.candidate_method not in ("auto", "broadcast", "lsh"):
+            raise ValueError(
+                "candidate_method must be 'auto', 'broadcast' or 'lsh', "
+                f"got {self.candidate_method!r}"
+            )
 
 
 @dataclass(frozen=True)

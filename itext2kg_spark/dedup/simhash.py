@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from itext2kg_spark.merge.candidates import bucket_pairs
+
 
 def _simhash(text: str) -> int:
     acc = np.zeros(64, dtype=np.int64)
@@ -126,24 +128,14 @@ def simhash_pairs(
         ).alias("b"),
     ).select("id", "sig", "b.band", "b.block")
 
-    x, y = blocks.alias("x"), blocks.alias("y")
     # hamming filter BEFORE the pair dedup: the band join emits one row per
     # shared block (O(collisions) rows — millions at small block widths) and
     # bit_count is whole-stage-codegen'd per row, so filtering first shrinks
     # the dropDuplicates shuffle to just the near pairs (sf0.1, 16 bands:
     # 7.4M candidate rows -> hundreds)
-    cand = (
-        x.join(y, ["band", "block"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.bit_count(F.col("x.sig").bitwiseXOR(F.col("y.sig"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return cand
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    near = bucket_pairs(blocks, ["band", "block"], where=hamming <= max_hamming)
+    return near.select("id_a", "id_b", hamming.alias("hamming"))
 
 
 def simhash_verified_pairs(

@@ -23,6 +23,13 @@ Both return (id_a, id_b, sim) with id_a < id_b, deduped across buckets.
 Pairs where both sides are existing-store rows are excluded — the reference
 only matches batch-against-store, never store-internal pairs
 (matcher.py:41-94), so the canonical store stays stable across increments.
+
+Every bucketed candidate join in the package (the LSH path here, the ANN
+LSH/IVF joins in `similarity/ann.py`, the SimHash block join in
+`dedup/simhash.py`) runs through one kernel: `bucket_pairs` equi-joins
+(item, bucket) rows on the bucket — ids plus the columns its pair filter
+reads, never an embedding — filters, and dedups the pairs once;
+`score_pairs` then joins the embeddings onto the distinct pairs only.
 """
 
 from __future__ import annotations
@@ -107,6 +114,68 @@ def pair_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     if len(ma) == 0:
         return pd.Series([], dtype=float)
     return pd.Series(np.einsum("ij,ij->i", ma, mb))
+
+
+def bucket_pairs(
+    left: DataFrame,
+    on: str | list[str],
+    right: DataFrame | None = None,
+    where: F.Column | None = None,
+) -> DataFrame:
+    """Candidate pairs of items that share a bucket.
+
+    Input: one row per (item, bucket) with an `id` column, the bucket key
+    column(s) `on`, and only the columns `where` reads. Every column other
+    than `on` enters the join renamed `<c>_a` (left) / `<c>_b` (right), so
+    `where` is written over those names. `right=None` joins `left` with
+    itself and keeps id_a < id_b; `right=` (same shape) gives the bipartite
+    form and keeps id_a != id_b. `where` runs BEFORE the single
+    (id_a, id_b) dedup: the join emits one row per shared bucket, so a
+    selective filter shrinks the dedup shuffle to the pairs that pass.
+
+    Returns (id_a, id_b, <payload>_a, <payload>_b), one row per pair.
+    """
+    keys = [on] if isinstance(on, str) else list(on)
+
+    def side(df: DataFrame, sfx: str) -> DataFrame:
+        return df.select(
+            *keys, *[F.col(c).alias(f"{c}_{sfx}") for c in df.columns if c not in keys]
+        )
+
+    if right is None:
+        keep = F.col("id_a") < F.col("id_b")
+        right = left
+    else:
+        keep = F.col("id_a") != F.col("id_b")
+    if where is not None:
+        keep = keep & where
+    return (
+        side(left, "a").join(side(right, "b"), keys)
+        .where(keep)
+        .drop(*keys)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def score_pairs(
+    pairs: DataFrame,
+    items: DataFrame,
+    emb_col: str = "emb",
+    right: DataFrame | None = None,
+) -> DataFrame:
+    """pairs(id_a, id_b, ...) -> + `sim`, the exact cosine of the two unit
+    embeddings. `items(id, emb_col)` supplies id_a's embedding, and id_b's
+    too unless the bipartite `right` is given. The wide arrays join onto the
+    distinct pairs only, never onto the pre-dedup bucket join."""
+    right = items if right is None else right
+    ea = items.select(F.col("id").alias("id_a"), F.col(emb_col).alias("__emb_a"))
+    eb = right.select(F.col("id").alias("id_b"), F.col(emb_col).alias("__emb_b"))
+    return (
+        pairs.join(ea, "id_a")
+        .join(eb, "id_b")
+        .withColumn("sim", pair_cosine(F.col("__emb_a"), F.col("__emb_b")))
+        .drop("__emb_a", "__emb_b")
+    )
 
 
 def _broadcast_pairs(
@@ -213,43 +282,24 @@ def candidate_pairs(
     # rows pre-dedup (measured 82M rows for 20k clustered vectors at 24
     # bands), and carrying the two embedding arrays through the join + the
     # pair-dedup shuffle multiplies its bytes ~60x (64-dim float64 pairs =
-    # ~1KB/row vs 16B of ids — ~80GB vs ~1.3GB at that scale). The deduped
-    # pair set joins back to `items` for exact scoring, so the wide arrays
-    # touch only distinct candidate pairs.
-    sel = [id_col] + (["is_existing"] if has_existing else [])
-    gate = F.lit(True)
-    if has_existing:
-        gate = ~(F.col("is_existing_a") & F.col("is_existing_b"))
+    # ~1KB/row vs 16B of ids — ~80GB vs ~1.3GB at that scale).
     if emb_dim:
         dim = emb_dim
     else:  # embedding dim read from one row (the schema doesn't carry it)
         first = items.select(F.size(emb_col).alias("d")).first()
         dim = int(first["d"]) if first else 2
     sigs = lsh_signatures_udf(dim, cfg.lsh_rows, cfg.lsh_bands, cfg.lsh_seed)
-    sig_items = items.select(*sel, F.explode(sigs(F.col(emb_col))).alias("sig"))
-    a = sig_items.select(*[F.col(c).alias(f"{c}_a") for c in sel], F.col("sig"))
-    b = sig_items.select(*[F.col(c).alias(f"{c}_b") for c in sel], F.col("sig"))
-    pair_ids = (
-        a.join(b, "sig")
-        .where((F.col(f"{id_col}_a") < F.col(f"{id_col}_b")) & gate)
-        .select(f"{id_col}_a", f"{id_col}_b")
-        .dropDuplicates([f"{id_col}_a", f"{id_col}_b"])
+    sig_items = items.select(
+        F.col(id_col).alias("id"),
+        *(["is_existing"] if has_existing else []),
+        F.explode(sigs(F.col(emb_col))).alias("sig"),
     )
-    ea = items.select(
-        F.col(id_col).alias(f"{id_col}_a"), F.col(emb_col).alias(f"{emb_col}_a")
+    gate = ~(F.col("is_existing_a") & F.col("is_existing_b")) if has_existing else None
+    scored = score_pairs(
+        bucket_pairs(sig_items, "sig", where=gate),
+        items.select(F.col(id_col).alias("id"), emb_col),
+        emb_col,
     )
-    eb = items.select(
-        F.col(id_col).alias(f"{id_col}_b"), F.col(emb_col).alias(f"{emb_col}_b")
-    )
-    sim = pair_cosine(F.col(f"{emb_col}_a"), F.col(f"{emb_col}_b"))
-    pairs = (
-        pair_ids.join(ea, f"{id_col}_a")
-        .join(eb, f"{id_col}_b")
-        .withColumn("sim", sim)
-        .where(F.col("sim") >= threshold if cfg.inclusive else F.col("sim") > threshold)
-    )
-    return pairs.select(
-        F.col(f"{id_col}_a").alias("id_a"),
-        F.col(f"{id_col}_b").alias("id_b"),
-        "sim",
-    )
+    return scored.where(
+        F.col("sim") >= threshold if cfg.inclusive else F.col("sim") > threshold
+    ).select("id_a", "id_b", "sim")

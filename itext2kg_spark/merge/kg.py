@@ -118,127 +118,6 @@ def embed_entities(
     )
 
 
-def _resolve_both_driver(q: DataFrame, cfg: PipelineConfig, embedder):
-    """One-job driver-path resolution of entities AND predicates for fresh
-    batches: a kind-tagged 3-way explode of the (checkpointed) quintuple
-    table feeds a single distinct-aggregate + embed + collect; the per-kind
-    numpy resolutions (identical `_driver_resolve` calls to resolve_items'
-    driver path — thresholds, link mode, ordering and tie-breaks unchanged)
-    run on the collected rows. Returns (resolved_entities_df,
-    resolved_predicates_df) with the same schemas/semantics the two
-    resolve_items calls produce for is_existing=False inputs: semantics are
-    unchanged because entity rows only ever score against entity rows and
-    predicate rows against predicate rows — the kinds are split BEFORE any
-    cosine is computed."""
-    from itext2kg_spark.merge.resolve import _driver_resolve
-
-    e = embedder.udf()
-    ord_ = _mention_order().alias("__ord")
-    kinds = F.explode(
-        F.array(
-            F.struct(
-                F.lit("e").alias("kind"),
-                F.col("subj_name").alias("name"),
-                F.col("subj_label").alias("label"),
-                ord_,
-            ),
-            F.struct(
-                F.lit("e").alias("kind"),
-                F.col("obj_name").alias("name"),
-                F.col("obj_label").alias("label"),
-                ord_,
-            ),
-            F.struct(
-                F.lit("p").alias("kind"),
-                F.col("pred").alias("name"),
-                F.lit("").alias("label"),
-                ord_,
-            ),
-        )
-    )
-    items = (
-        q.select(kinds.alias("m"))
-        .select("m.kind", "m.name", "m.label", "m.__ord")
-        .groupBy("kind", "name", "label")
-        .agg(F.min("__ord").alias("first_seen"))
-    )
-    nw, lw = float(cfg.embed.name_weight), float(cfg.embed.label_weight)
-    d = items.withColumn("__emb_n", e(F.col("name"))).withColumn(
-        "__emb_l", e(F.col("label"))
-    )
-    combined = F.when(
-        F.col("kind") == "e",
-        F.zip_with(
-            "__emb_n", "__emb_l", lambda a, b: a * F.lit(nw) + b * F.lit(lw)
-        ),
-    ).otherwise(F.col("__emb_n"))  # predicates embed the name alone
-    d = (
-        d.withColumn("embedding", combined)
-        .withColumn("emb", unit(F.col("embedding")))
-        .drop("__emb_n", "__emb_l")
-    )
-    rows = d.collect()
-    spark = q.sparkSession
-    emb_type = d.schema["embedding"].dataType
-
-    def _local(kind, key_cols, threshold):
-        sub = [r for r in rows if r["kind"] == kind]
-        resolved = _driver_resolve(
-            sub,
-            key_cols,
-            threshold,
-            cfg.match.inclusive,
-            has_existing=False,
-            order_col="first_seen",
-            link_mode=cfg.match.link_mode,
-        )
-        return sub, resolved
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    import pandas as pd
-
-    esub, eres = _local("e", ["name", "label"], cfg.match.ent_threshold)
-    e_schema = StructType(
-        [
-            StructField("name", StringType(), True),
-            StructField("label", StringType(), True),
-            StructField("embedding", emb_type, True),
-            StructField("comp", LongType(), False),
-            StructField("is_rep", BooleanType(), False),
-            StructField("canon_name", StringType(), True),
-            StructField("canon_label", StringType(), True),
-        ]
-    )
-    e_rows = [
-        (r["name"], r["label"], r["embedding"]) + res[2:]
-        for r, res in zip(esub, eres)
-    ]
-    resolved_e = spark.createDataFrame(
-        pd.DataFrame(e_rows, columns=[f.name for f in e_schema.fields]),
-        e_schema,
-    )
-
-    psub, pres = _local("p", ["name"], cfg.match.rel_threshold)
-    p_schema = StructType(
-        [
-            StructField("pred", StringType(), True),
-            StructField("canon_pred", StringType(), True),
-        ]
-    )
-    p_rows = [(r["name"], res[3]) for r, res in zip(psub, pres)]
-    resolved_p = spark.createDataFrame(
-        pd.DataFrame(p_rows, columns=["pred", "canon_pred"]), p_schema
-    )
-    return resolved_e, resolved_p
-
-
 def canonicalize_kg(
     quintuples: DataFrame,
     cfg: PipelineConfig,
@@ -357,32 +236,14 @@ def canonicalize_kg(
             n_items_hint=pred_hint,
         )
 
-    # Fast path for fresh batches (no store tables, both hints clearly under
-    # the driver limit): ONE job aggregates distinct entities AND predicates
-    # (kind-tagged union), embeds them in a single ArrowEvalPython stage and
-    # collects once; the per-kind numpy resolutions then run on the driver
-    # exactly as resolve_items' driver path would. Incremental merges and big
-    # batches fall back to the per-kind resolve_items pair on two driver
-    # threads.
-    limit = cfg.match.effective_broadcast_limit(2 * cfg.embed.dim)
-    if (
-        existing_entities is None
-        and existing_edges is None
-        and ent_hint is not None
-        and pred_hint is not None
-        and (ent_hint + pred_hint) * 1.2 + 200 <= limit
-    ):
-        resolved_e, resolved_p = _resolve_both_driver(q, cfg, embedder)
-    else:
-        # Entity and predicate resolution are independent chains of small
-        # jobs (checkpoint/count/CC iterations); running them on two driver
-        # threads overlaps their serial latencies — Spark schedules
-        # concurrent jobs fine.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fe = pool.submit(_resolve_entities)
-            fp = pool.submit(_resolve_predicates)
-            resolved_e = fe.result()
-            resolved_p = fp.result()
+    # Entity and predicate resolution are independent chains of small jobs
+    # (checkpoint/count/CC iterations); running them on two driver threads
+    # overlaps their serial latencies — Spark schedules concurrent jobs fine.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fe = pool.submit(_resolve_entities)
+        fp = pool.submit(_resolve_predicates)
+        resolved_e = fe.result()
+        resolved_p = fp.result()
 
     ent_map = resolved_e.select("name", "label", "canon_name", "canon_label")
     entities = resolved_e.where("is_rep").select(

@@ -387,7 +387,7 @@ def resolve_items(
         comp = _distributed_leader(
             with_id, pairs, order, max_iter=cfg.cc_max_iter
         )
-    elif cfg.link_mode == "best":
+    else:
         # Keep only each node's single best-scoring link (argmax parity with
         # the reference; weak non-best pairs above θ never form links there,
         # so including them would transitively over-merge distinct clusters
@@ -406,14 +406,13 @@ def resolve_items(
             )
             directed = directed.join(nonexist, "v", "left_semi")
         wbest = Window.partitionBy("v").orderBy(F.col("sim").desc(), F.col("w").asc())
-        pairs = (
+        best = (
             directed.withColumn("__rn", F.row_number().over(wbest))
             .where(F.col("__rn") == 1)
             .select(F.col("v").alias("id_a"), F.col("w").alias("id_b"), "sim")
         )
-    if cfg.link_mode != "leader":
         comp = connected_components(
-            with_id.select("id"), pairs, max_iter=cfg.cc_max_iter
+            with_id.select("id"), best, max_iter=cfg.cc_max_iter
         )
     labeled = with_id.join(comp, "id", "left").withColumn(
         "comp", F.coalesce(F.col("comp"), F.col("id"))

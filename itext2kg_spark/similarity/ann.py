@@ -10,11 +10,20 @@
   signatures (shared operator with entity resolution), candidates come from
   bucket equi-joins, exact cosine re-ranks within candidates. Sub-linear
   candidate volume; recall is tunable via (rows, bands).
+* `ann_topk_ivf` — coarse-quantizer cells as the buckets: queries probe
+  their nearest cells, the corpus sits in its nearest one.
+
+The LSH and IVF candidates come from the package's one bucket-pair kernel
+(`merge.candidates.bucket_pairs`, bipartite form: queries x corpus, self
+matches dropped). Its join carries ids only; `score_pairs` joins the
+embeddings onto the distinct (query, neighbor) pairs afterwards, so no
+vector is copied once per shared band or probed cell.
 
 All cosine math is float64; candidate re-ranks score through the shared
 Arrow-vectorized einsum scorer (`merge.candidates.pair_cosine`) — Catalyst
 higher-order array functions are interpreted per element and ~100x slower
-than numpy on this path (see merge/candidates.py docstring).
+than numpy on this path (see merge/candidates.py docstring). All three
+searches rank through one window (`_top_k`).
 """
 
 from __future__ import annotations
@@ -27,13 +36,35 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from itext2kg_spark.functions.vectors import unit
-from itext2kg_spark.merge.candidates import lsh_signatures_udf, pair_cosine
+from itext2kg_spark.merge.candidates import (
+    bucket_pairs,
+    lsh_signatures_udf,
+    md5_rademacher,
+    score_pairs,
+)
 
 
-def _prep(df: DataFrame, id_col: str, emb_col: str, alias: str) -> DataFrame:
+def _prep(df: DataFrame, id_col: str, emb_col: str) -> DataFrame:
     return df.select(
-        F.col(id_col).alias(f"{alias}_id"),
-        unit(F.col(emb_col).cast("array<double>")).alias(f"{alias}_emb"),
+        F.col(id_col).alias("id"),
+        unit(F.col(emb_col).cast("array<double>")).alias("emb"),
+    )
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """(id_a, id_b, sim) scored query/neighbor pairs -> the k best
+    neighbors per query, ordered sim desc then neighbor id asc:
+    (query_id, neighbor_id, rank, sim_10k)."""
+    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b").asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("id_a").alias("query_id"),
+            F.col("id_b").alias("neighbor_id"),
+            F.col("rank").cast("long").alias("rank"),
+            F.floor(F.col("sim") * 10000).cast("long").alias("sim_10k"),
+        )
     )
 
 
@@ -46,17 +77,15 @@ def ann_topk_bruteforce(
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, sim_10k); self-matches excluded,
     deterministic tie-break on neighbor id."""
-    q = _prep(queries, id_col, emb_col, "query")
-    c = _prep(corpus, id_col, emb_col, "neighbor")
+    q = _prep(queries, id_col, emb_col)
+    c = _prep(corpus, id_col, emb_col)
     qrows = q.collect()
     if not qrows:
         return q.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, rank long, sim_10k long"
         )
-    q_ids = np.asarray([r["query_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.asarray(
-        [np.asarray(r["query_emb"], dtype=np.float64) for r in qrows]
-    )
+    q_ids = np.asarray([r["id"] for r in qrows], dtype=np.int64)
+    q_mat = np.asarray([np.asarray(r["emb"], dtype=np.float64) for r in qrows])
     bc = q.sparkSession.sparkContext.broadcast((q_ids, q_mat))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -65,10 +94,8 @@ def ann_topk_bruteforce(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            c_ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            c_mat = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf["neighbor_emb"]]
-            )
+            c_ids = pdf["id"].to_numpy(dtype=np.int64)
+            c_mat = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf["emb"]])
             sims = c_mat @ mat_q.T  # (batch, Q) — one BLAS call
             sims[c_ids[:, None] == ids_q[None, :]] = -np.inf  # self-match
             # partial top-k per query under the GLOBAL ordering
@@ -84,27 +111,14 @@ def ann_topk_bruteforce(
             keep = np.isfinite(sims[rows, qcol])
             yield pd.DataFrame(
                 {
-                    "query_id": ids_q[qcol[keep]],
-                    "neighbor_id": c_ids[rows[keep]],
+                    "id_a": ids_q[qcol[keep]],
+                    "id_b": c_ids[rows[keep]],
                     "sim": sims[rows[keep], qcol[keep]],
                 }
             )
 
-    partial = c.mapInPandas(
-        score, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.floor(F.col("sim") * 10000).cast("long").alias("sim_10k"),
-        )
+    return _top_k(
+        c.mapInPandas(score, schema="id_a long, id_b long, sim double"), k
     )
 
 
@@ -149,31 +163,22 @@ def ann_topk_ivf(
     sample size when the sample is complete, else one corpus count(). Pass
     explicit n_cells/n_probe to override.
     """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    c = _prep(corpus, id_col, emb_col, "neighbor")
-    q = _prep(queries, id_col, emb_col, "query")
+    c = _prep(corpus, id_col, emb_col)
+    q = _prep(queries, id_col, emb_col)
 
     if centroid_source == "md5":
-        from itext2kg_spark.merge.candidates import md5_rademacher
-
         if n_cells is None:
             n_corpus = c.count()
             n_cells = max(1, min(int(np.ceil(np.sqrt(n_corpus))), 4096))
         if n_probe is None:
             n_probe = max(3, -(-n_cells // 8))
-        dim_row = c.select(F.size("neighbor_emb").alias("d")).first()
+        dim_row = c.select(F.size("emb").alias("d")).first()
         if dim_row is None:
             return ann_topk_bruteforce(queries, corpus, k, id_col, emb_col)
         cent = md5_rademacher(seed, n_cells, int(dim_row["d"]))
     else:
-        sample = (
-            c.orderBy("neighbor_id").limit(sample_size)
-            .select("neighbor_emb").collect()
-        )
-        mat = np.asarray([np.asarray(r["neighbor_emb"]) for r in sample])
+        sample = c.orderBy("id").limit(sample_size).select("emb").collect()
+        mat = np.asarray([np.asarray(r["emb"]) for r in sample])
         if len(mat) == 0:
             return ann_topk_bruteforce(queries, corpus, k, id_col, emb_col)
         if n_cells is None:
@@ -195,51 +200,32 @@ def ann_topk_ivf(
                         cent[j] = v / n
     bc = c.sparkSession.sparkContext.broadcast(cent)
 
-    def assign_cells(col_emb: str, col_id: str, probes: int):
+    def assign_cells(probes: int):
+        # (id, cell) rows only: the embedding stays behind and joins back
+        # once per distinct candidate pair in score_pairs
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ct = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                m = np.asarray([np.asarray(e) for e in pdf[col_emb]])
-                sims = m @ ct.T
-                top = np.argsort(-sims, axis=1)[:, :probes]
-                rows = {
-                    col_id: np.repeat(pdf[col_id].to_numpy(), probes),
-                    "cell": top.reshape(-1).astype(np.int64),
-                    col_emb: [e for e in pdf[col_emb] for _ in range(probes)],
-                }
-                yield pd.DataFrame(rows)
+                m = np.asarray([np.asarray(e) for e in pdf["emb"]])
+                top = np.argsort(-(m @ ct.T), axis=1)[:, :probes]
+                yield pd.DataFrame(
+                    {
+                        "id": np.repeat(pdf["id"].to_numpy(), probes),
+                        "cell": top.reshape(-1).astype(np.int64),
+                    }
+                )
 
         return run
 
-    c_cells = c.mapInPandas(
-        assign_cells("neighbor_emb", "neighbor_id", 1),
-        schema="neighbor_id long, cell long, neighbor_emb array<double>",
+    schema = "id long, cell long"
+    pairs = bucket_pairs(
+        q.mapInPandas(assign_cells(n_probe), schema=schema),
+        "cell",
+        right=c.mapInPandas(assign_cells(1), schema=schema),
     )
-    q_cells = q.mapInPandas(
-        assign_cells("query_emb", "query_id", n_probe),
-        schema="query_id long, cell long, query_emb array<double>",
-    )
-    cand = (
-        q_cells.join(c_cells, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("sim", pair_cosine(F.col("query_emb"), F.col("neighbor_emb")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.floor(F.col("sim") * 10000).cast("long").alias("sim_10k"),
-        )
-    )
+    return _top_k(score_pairs(pairs, q, "emb", right=c), k)
 
 
 def ann_topk_lsh(
@@ -256,32 +242,14 @@ def ann_topk_lsh(
     """Approximate top-k: LSH-bucketed candidates, exact re-rank.
     plane_source="md5" uses SQL-replicable Rademacher planes (see
     lsh_signatures_udf) so the whole query is oracle-checkable."""
-    q = _prep(queries, id_col, emb_col, "query")
-    c = _prep(corpus, id_col, emb_col, "neighbor")
-    dim_row = c.select(F.size("neighbor_emb").alias("d")).first()
+    q = _prep(queries, id_col, emb_col)
+    c = _prep(corpus, id_col, emb_col)
+    dim_row = c.select(F.size("emb").alias("d")).first()
     dim = int(dim_row["d"]) if dim_row else 2
     sig = lsh_signatures_udf(dim, rows, bands, seed, plane_source)
 
-    qs = q.select("query_id", "query_emb", F.explode(sig("query_emb")).alias("sig"))
-    cs = c.select(
-        "neighbor_id", "neighbor_emb", F.explode(sig("neighbor_emb")).alias("sig")
-    )
-    cand = (
-        qs.join(cs, "sig")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("sim", pair_cosine(F.col("query_emb"), F.col("neighbor_emb")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.floor(F.col("sim") * 10000).cast("long").alias("sim_10k"),
-        )
-    )
+    def buckets(df: DataFrame) -> DataFrame:
+        return df.select("id", F.explode(sig("emb")).alias("sig"))
+
+    pairs = bucket_pairs(buckets(q), "sig", right=buckets(c))
+    return _top_k(score_pairs(pairs, q, "emb", right=c), k)

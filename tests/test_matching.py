@@ -218,6 +218,23 @@ def test_distributed_leader_refuses_above_sort_limit(spark):
     assert ok.count() == 3
 
 
+def test_match_config_rejects_values_no_path_honours():
+    """link_mode="all" used to be documented, but the driver resolve treated
+    it as "best" while the distributed one linked every pair, so the result
+    hung on the item count; an unknown candidate_method silently became
+    LSH. Both are refused when the config is built."""
+    from itext2kg_spark.config import MatchConfig
+
+    for mode in ("best", "leader"):
+        assert MatchConfig(link_mode=mode).link_mode == mode
+    for method in ("auto", "broadcast", "lsh"):
+        assert MatchConfig(candidate_method=method).candidate_method == method
+    with pytest.raises(ValueError, match="link_mode"):
+        MatchConfig(link_mode="all")
+    with pytest.raises(ValueError, match="candidate_method"):
+        MatchConfig(candidate_method="minhash")
+
+
 def test_driver_and_distributed_paths_equivalent_randomized(spark):
     """Randomized equivalence of the two physical resolution strategies: the
     driver BLAS path and the LSH/CC distributed path must induce the same

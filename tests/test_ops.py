@@ -112,16 +112,34 @@ def test_lsh_candidate_recall_against_broadcast(spark):
     df = spark.createDataFrame(rows, "id long, emb array<float>").withColumn(
         "emb", unit(F.col("emb").cast("array<double>"))
     )
-    exact = candidate_pairs(
-        df, MatchConfig(candidate_method="broadcast"), 0.8
-    )
-    lsh = candidate_pairs(df, MatchConfig(candidate_method="lsh"), 0.8)
-    e = {(r["id_a"], r["id_b"]) for r in exact.collect()}
-    l = {(r["id_a"], r["id_b"]) for r in lsh.collect()}
-    assert len(e) > 0
-    recall = len(e & l) / len(e)
-    assert recall >= 0.99, f"LSH recall {recall}"
-    assert l <= e  # exact-cosine verification removes false candidates
+    # second input: every even id is a store row, so the LSH path's
+    # is_existing gate must drop each store-store pair
+    gated = df.withColumn("is_existing", F.col("id") % 2 == 0)
+
+    def pairs(items, method):
+        out = candidate_pairs(items, MatchConfig(candidate_method=method), 0.8)
+        return {(r["id_a"], r["id_b"]) for r in out.collect()}
+
+    def store_store(ps):
+        return {(a, b) for a, b in ps if a % 2 == 0 and b % 2 == 0}
+
+    lsh = {}
+    for name, items in (("plain", df), ("gated", gated)):
+        e, l = pairs(items, "broadcast"), pairs(items, "lsh")
+        assert len(e) > 0
+        recall = len(e & l) / len(e)
+        assert recall >= 0.99, f"{name}: LSH recall {recall}"
+        assert l <= e  # exact-cosine verification removes false candidates
+        lsh[name] = l
+    assert store_store(lsh["plain"])  # the gate has pairs to drop
+    assert not store_store(lsh["gated"])
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
 
 
 def test_ann_topk_and_lsh(spark):
@@ -144,6 +162,15 @@ def test_ann_topk_and_lsh(spark):
     lsh = ann_topk_lsh(q, vecs, k=4, rows=4, bands=16)
     per_q = lsh.groupBy("query_id").count().collect()
     assert all(r["count"] <= 4 for r in per_q)
+    # the band join moves ids and signatures only; the embeddings join onto
+    # the distinct pairs afterwards
+    sig_joins = [
+        n for n in _plan_nodes(lsh._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "Join" and "sig" in n.condition().toString()
+    ]
+    assert len(sig_joins) == 1
+    out = sig_joins[0].output()
+    assert {out.apply(i).name() for i in range(out.size())} == {"id_a", "sig", "id_b"}
 
 
 def test_text_stats_and_langid(spark):

@@ -1,7 +1,11 @@
-"""Oracle leg for the near-dup / corpus family: five registry queries at the
-smallest test scale against their DuckDB oracle SQL, compared the way
-scripts/check_oracle.py compares them (row count, column names,
-order-insensitive value multiset)."""
+"""Oracle leg for the near-dup / corpus family and the bucket-join similarity
+operators: registry queries at the smallest test scale against their DuckDB
+oracle SQL, compared the way scripts/check_oracle.py compares them (row
+count, column names, order-insensitive value multiset). The corpus family
+(MinHash pairs, clusters, prepare, incremental and stream) and the queries
+whose candidates come from the shared bucket-pair kernel (ANN LSH and IVF,
+SimHash, SimHash + Jaccard verification) plus the brute-force ANN they are
+ranked like."""
 
 import pytest
 
@@ -16,6 +20,11 @@ QUERIES = (
     "corpus_prepare",
     "corpus_incremental_exact",
     "corpus_stream_exact",
+    "ann_topk",
+    "ann_lsh",
+    "ann_ivf",
+    "dedup_simhash",
+    "dedup_simhash_verified",
 )
 
 
