@@ -160,16 +160,15 @@ def bucket_pairs(
 def score_pairs(
     pairs: DataFrame,
     items: DataFrame,
-    emb_col: str = "emb",
     right: DataFrame | None = None,
 ) -> DataFrame:
     """pairs(id_a, id_b, ...) -> + `sim`, the exact cosine of the two unit
-    embeddings. `items(id, emb_col)` supplies id_a's embedding, and id_b's
+    embeddings. `items(id, emb)` supplies id_a's embedding, and id_b's
     too unless the bipartite `right` is given. The wide arrays join onto the
     distinct pairs only, never onto the pre-dedup bucket join."""
     right = items if right is None else right
-    ea = items.select(F.col("id").alias("id_a"), F.col(emb_col).alias("__emb_a"))
-    eb = right.select(F.col("id").alias("id_b"), F.col(emb_col).alias("__emb_b"))
+    ea = items.select(F.col("id").alias("id_a"), F.col("emb").alias("__emb_a"))
+    eb = right.select(F.col("id").alias("id_b"), F.col("emb").alias("__emb_b"))
     return (
         pairs.join(ea, "id_a")
         .join(eb, "id_b")
@@ -297,8 +296,7 @@ def candidate_pairs(
     gate = ~(F.col("is_existing_a") & F.col("is_existing_b")) if has_existing else None
     scored = score_pairs(
         bucket_pairs(sig_items, "sig", where=gate),
-        items.select(F.col(id_col).alias("id"), emb_col),
-        emb_col,
+        items.select(F.col(id_col).alias("id"), F.col(emb_col).alias("emb")),
     )
     return scored.where(
         F.col("sim") >= threshold if cfg.inclusive else F.col("sim") > threshold

@@ -37,6 +37,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from itext2kg_spark.config import PipelineConfig
 from itext2kg_spark.functions.normalize import norm_label, norm_name, norm_predicate
@@ -239,9 +240,12 @@ def canonicalize_kg(
     # Entity and predicate resolution are independent chains of small jobs
     # (checkpoint/count/CC iterations); running them on two driver threads
     # overlaps their serial latencies — Spark schedules concurrent jobs fine.
+    # The pool threads take on the caller's local properties (job group,
+    # description, scheduler pool) and session tags.
+    inherit = inheritable_thread_target(quintuples.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fe = pool.submit(_resolve_entities)
-        fp = pool.submit(_resolve_predicates)
+        fe = pool.submit(inherit(_resolve_entities))
+        fp = pool.submit(inherit(_resolve_predicates))
         resolved_e = fe.result()
         resolved_p = fp.result()
 

@@ -225,7 +225,7 @@ def ann_topk_ivf(
         "cell",
         right=c.mapInPandas(assign_cells(1), schema=schema),
     )
-    return _top_k(score_pairs(pairs, q, "emb", right=c), k)
+    return _top_k(score_pairs(pairs, q, right=c), k)
 
 
 def ann_topk_lsh(
@@ -252,4 +252,4 @@ def ann_topk_lsh(
         return df.select("id", F.explode(sig("emb")).alias("sig"))
 
     pairs = bucket_pairs(buckets(q), "sig", right=buckets(c))
-    return _top_k(score_pairs(pairs, q, "emb", right=c), k)
+    return _top_k(score_pairs(pairs, q, right=c), k)

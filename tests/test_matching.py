@@ -235,6 +235,30 @@ def test_match_config_rejects_values_no_path_honours():
         MatchConfig(candidate_method="minhash")
 
 
+def test_resolve_threads_inherit_caller_job_group(spark):
+    """Entity and predicate resolution run on two pool threads; the job
+    group the caller sets must reach their jobs too, so a caller can name,
+    track or cancel a whole build."""
+    rows = [
+        q("u1", OBS1, 0, "John Doe works at Google.",
+          "John Doe", "Person", "works_at", "Google", "Company"),
+        q("u2", OBS2, 0, "Jane Roe works at Google.",
+          "Jane Roe", "Person", "works_at", "Google", "Company"),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kg-build", "kg build")
+    try:
+        ents, edges = build(spark, rows)
+        assert ents.count() == 3 and edges.count() == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("kg-build")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
 def test_driver_and_distributed_paths_equivalent_randomized(spark):
     """Randomized equivalence of the two physical resolution strategies: the
     driver BLAS path and the LSH/CC distributed path must induce the same
