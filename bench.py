@@ -322,8 +322,24 @@ def main():
     print(f"# headline roofline probe: pre={roof_pre}s post={roof_post}s "
           f"(quiet band {ROOFLINE_QUIET_BAND} at sf0.1)", file=sys.stderr)
 
+    # The KG legs above time a count(), which Catalyst answers without
+    # building the collect_list edge lists nothing references; the same
+    # queries into a `noop` sink build every output column.
+    noop: dict[str, float] = {}
+    for name in ("kg_build_graph", "kg_exact_merge_edges"):
+        raw = []
+        for _ in range(headline_runs):
+            t0 = time.time()
+            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            raw.append(time.time() - t0)
+        noop[name] = round(min(raw), 3)
+        detail.setdefault("queries_noop_raw", {})[name] = [round(t, 3) for t in raw]
+        print(f"# {name} (noop sink): {noop[name]}s (best of {headline_runs})",
+              file=sys.stderr)
+
     out["value"] = total
     out["queries"] = results
+    out["queries_noop"] = noop
     detail["queries_raw"] = results_raw
     detail["headline_roofline_sec"] = {"pre": roof_pre, "post": roof_post}
 

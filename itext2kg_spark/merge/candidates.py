@@ -19,10 +19,12 @@ candidates come from one of two shuffle-parallel plans:
     (r=6, B=24) ≥ 0.997 recall at θ=0.7. Near-linear in rows; the bucket
     join shuffles on (band, sig), hot buckets split by AQE.
 
-Both return (id_a, id_b, sim) with id_a < id_b, deduped across buckets.
-Pairs where both sides are existing-store rows are excluded — the reference
-only matches batch-against-store, never store-internal pairs
-(matcher.py:41-94), so the canonical store stays stable across increments.
+Both return (id_a, id_b, sim) with id_a < id_b, deduped across buckets; or,
+given a second item set `right`, the bipartite pairs (id_a from the first
+set, id_b from `right`). Incremental resolution uses the bipartite form with
+the batch as the broadcast/banded side and the stored items streamed against
+it, so no store-internal pair is ever formed (the reference matches
+batch-against-store only, matcher.py:41-94).
 
 Every bucketed candidate join in the package (the LSH path here, the ANN
 LSH/IVF joins in `similarity/ann.py`, the SimHash block join in
@@ -40,9 +42,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from itext2kg_spark.config import MatchConfig
+
+# Best-link ties are decided on cosines rounded to this many decimals: one
+# pair scored in two BLAS block shapes can differ in its last bits, and an
+# exact tie (token permutations embed identically) must still go to the
+# smallest id on every path.
+TIE_DECIMALS = 9
 
 
 def md5_rademacher(seed: int, n_rows: int, dim: int) -> "np.ndarray":
@@ -178,33 +192,40 @@ def score_pairs(
 
 
 def _broadcast_pairs(
-    items: DataFrame,
+    probe: DataFrame,
+    ids: "np.ndarray",
+    mat: "np.ndarray",
     threshold: float,
     inclusive: bool,
-    emb_col: str,
-    id_col: str,
-    gate_existing: bool,
+    bipartite: bool,
+    top: bool = False,
 ) -> DataFrame:
-    """Exact all-pairs via per-partition BLAS matmul against the collected
-    small side (<= broadcast_limit rows)."""
-    sel = [id_col, emb_col] + (["is_existing"] if gate_existing else [])
-    rows = items.select(*sel).collect()
-    if not rows:
-        return items.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, sim double"
-        )
-    ids = np.asarray([r[id_col] for r in rows], dtype=np.int64)
-    mat = np.asarray([np.asarray(r[emb_col], dtype=np.float64) for r in rows])
-    exist = (
-        np.asarray([bool(r["is_existing"]) for r in rows])
-        if gate_existing
-        else np.zeros(len(rows), dtype=bool)
+    """Exact pairs via per-partition BLAS matmul: each Arrow batch of
+    `probe(id, emb, ...)` scores against the broadcast small side (`ids`,
+    unit rows `mat`, <= broadcast_limit rows).
+
+    Returns (id_a, id_b, sim, <probe's other columns>): id_a a broadcast id,
+    id_b a probe id. The self form (both sides one item set) keeps
+    id_a < id_b; the bipartite form keeps id_a != id_b. `top` keeps, per
+    broadcast id and row block, only the best-scoring probe rows (all ties at
+    TIE_DECIMALS).
+    """
+    payload = [c for c in probe.columns if c not in ("id", "emb")]
+    schema = StructType(
+        [
+            StructField("id_a", LongType()),
+            StructField("id_b", LongType()),
+            StructField("sim", DoubleType()),
+        ]
+        + [probe.schema[c] for c in payload]
     )
-    spark = items.sparkSession
-    b = spark.sparkContext.broadcast((ids, mat, exist))
+    spark = probe.sparkSession
+    if len(ids) == 0:
+        return spark.createDataFrame([], schema)
+    b = spark.sparkContext.broadcast((ids, mat))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, mat_b, exist_b = b.value
+        ids_b, mat_b = b.value
         m = len(ids_b)
         # Row-block the arrow batch so each (rows x M) sims block stays
         # ~32 MB: one giant block (2k-row partition x 64k items = 1 GB of
@@ -215,34 +236,30 @@ def _broadcast_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a_mat = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
-            a_exist = (
-                pdf["is_existing"].to_numpy(dtype=bool)
-                if gate_existing
-                else np.zeros(len(pdf), dtype=bool)
+            p_ids = pdf["id"].to_numpy(dtype=np.int64)
+            p_mat = np.asarray(
+                [np.asarray(e, dtype=np.float64) for e in pdf["emb"]]
             )
             for s in range(0, len(pdf), blk):
-                r_ids = a_ids[s:s + blk]
-                sims = a_mat[s:s + blk] @ mat_b.T  # (blk, M) — BLAS
+                r_ids = p_ids[s:s + blk]
+                sims = p_mat[s:s + blk] @ mat_b.T  # (blk, M) — BLAS
                 cond = sims >= threshold if inclusive else sims > threshold
-                cond &= r_ids[:, None] < ids_b[None, :]
-                if gate_existing:
-                    cond &= ~(a_exist[s:s + blk][:, None] & exist_b[None, :])
-                ai, bj = np.nonzero(cond)
-                yield pd.DataFrame(
-                    {
-                        "id_a": r_ids[ai],
-                        "id_b": ids_b[bj],
-                        "sim": sims[ai, bj],
-                    }
+                if bipartite:
+                    cond &= r_ids[:, None] != ids_b[None, :]
+                else:
+                    cond &= ids_b[None, :] < r_ids[:, None]
+                pi, bj = np.nonzero(cond)
+                out = pd.DataFrame(
+                    {"id_a": ids_b[bj], "id_b": r_ids[pi], "sim": sims[pi, bj]}
                 )
+                for c in payload:
+                    out[c] = pdf[c].to_numpy()[s + pi]
+                if top and len(out):
+                    tied = out["sim"].round(TIE_DECIMALS)
+                    out = out[tied == tied.groupby(out["id_a"]).transform("max")]
+                yield out
 
-    return items.select(*sel).mapInPandas(
-        score, schema="id_a long, id_b long, sim double"
-    )
+    return probe.mapInPandas(score, schema=schema)
 
 
 def candidate_pairs(
@@ -253,27 +270,37 @@ def candidate_pairs(
     id_col: str = "id",
     n_items: int | None = None,
     emb_dim: int | None = None,
+    right: DataFrame | None = None,
 ) -> DataFrame:
-    """items(id, emb[, is_existing]) -> (id_a, id_b, sim), id_a < id_b.
+    """items(id, emb) -> (id_a, id_b, sim), id_a < id_b.
 
-    `emb` must be unit-normalized (cosine == dot). `emb_dim` byte-bounds the
-    broadcast path and saves the LSH path a dim-probing job.
+    With `right` (same two columns) the pairs are bipartite instead: id_a
+    from `items`, the side broadcast or banded first, id_b from `right`,
+    the side streamed against it, id_a != id_b.
+
+    `emb` must be unit-normalized (cosine == dot). `n_items` counts `items`;
+    `emb_dim` byte-bounds the broadcast path and saves the LSH path a
+    dim-probing job.
     """
     method = cfg.candidate_method
     if method == "auto":
         n = n_items if n_items is not None else items.count()
         method = "broadcast" if n <= cfg.candidate_broadcast_limit(emb_dim) else "lsh"
 
-    has_existing = "is_existing" in items.columns
+    def emb_items(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("emb"))
 
     if method == "broadcast":
+        rows = emb_items(items).collect()
+        ids = np.asarray([r["id"] for r in rows], dtype=np.int64)
+        mat = np.asarray([np.asarray(r["emb"], dtype=np.float64) for r in rows])
         return _broadcast_pairs(
-            items,
+            emb_items(items if right is None else right),
+            ids,
+            mat,
             threshold,
             cfg.inclusive,
-            emb_col,
-            id_col,
-            gate_existing=has_existing,
+            bipartite=right is not None,
         )
 
     # ---- LSH path -----------------------------------------------------------
@@ -288,16 +315,20 @@ def candidate_pairs(
         first = items.select(F.size(emb_col).alias("d")).first()
         dim = int(first["d"]) if first else 2
     sigs = lsh_signatures_udf(dim, cfg.lsh_rows, cfg.lsh_bands, cfg.lsh_seed)
-    sig_items = items.select(
-        F.col(id_col).alias("id"),
-        *(["is_existing"] if has_existing else []),
-        F.explode(sigs(F.col(emb_col))).alias("sig"),
-    )
-    gate = ~(F.col("is_existing_a") & F.col("is_existing_b")) if has_existing else None
-    scored = score_pairs(
-        bucket_pairs(sig_items, "sig", where=gate),
-        items.select(F.col(id_col).alias("id"), F.col(emb_col).alias("emb")),
-    )
+
+    def sig_items(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("id"), F.explode(sigs(F.col(emb_col))).alias("sig")
+        )
+
+    if right is None:
+        scored = score_pairs(bucket_pairs(sig_items(items), "sig"), emb_items(items))
+    else:
+        scored = score_pairs(
+            bucket_pairs(sig_items(items), "sig", right=sig_items(right)),
+            emb_items(items),
+            right=emb_items(right),
+        )
     return scored.where(
         F.col("sim") >= threshold if cfg.inclusive else F.col("sim") > threshold
     ).select("id_a", "id_b", "sim")

@@ -19,12 +19,20 @@ Reproduces the ATOM merge semantics (SURVEY.md §2.7) as one global dataflow:
      extends, never dedups) and are array_sort'ed for deterministic output —
      compare as multisets against the reference (SURVEY.md A4 note).
 
-Incremental path: existing entities join the resolution with is_existing=1;
-store-internal pairs are never candidates, so existing rows always map to
-themselves and a cluster's representative is the store row whenever one is
-present — matching `existing_knowledge_graph` behavior (atom/atom.py:196-208).
-Existing edges then union with the batch's mention rows before the groupBy, so
-re-observed edges extend their lists exactly like combine_timestamps.
+Incremental path: only the batch keys that are not already stored are
+embedded and resolved; a batch key equal to a stored key is that stored row.
+The stored entities are a streamed candidate side with their stored vectors
+(`existing_entities` must carry `embedding`; nothing is re-embedded), so no
+store-internal pair is ever formed, stored rows always map to themselves and
+a cluster's representative is the store row whenever one is present —
+matching `existing_knowledge_graph` behavior (atom/atom.py:196-208). The
+driver/distributed choice is keyed on the batch's new-key count. The output
+is the stored entities unchanged plus the new representatives; the edge
+remap reads a map of the new keys only, every other key mapping to itself.
+Stored predicates carry no vector in the snapshot: when a batch brings a
+new predicate they are re-embedded on the candidate side. Existing edges
+then union with the batch's mention rows before the groupBy, so re-observed
+edges extend their lists exactly like combine_timestamps.
 
 Scale shape: every join here is key-equi (broadcastable mapping tables —
 distinct names, not mentions); the single wide shuffle is the final groupBy on
@@ -37,7 +45,6 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.util import inheritable_thread_target
 
 from itext2kg_spark.config import PipelineConfig
 from itext2kg_spark.functions.normalize import norm_label, norm_name, norm_predicate
@@ -48,6 +55,39 @@ from itext2kg_spark.merge.resolve import resolve_items
 EDGE_GROUP_KEYS = ["src_name", "src_label", "pred", "dst_name", "dst_label"]
 
 EDGE_LIST_COLS = ["t_obs", "t_start", "t_end", "atomic_facts"]
+
+# the caller's job properties a resolve thread takes on
+_JOB_PROPERTIES = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+    "spark.job.tags",
+    "spark.scheduler.pool",
+)
+
+
+def _in_caller_context(spark):
+    """Wrap a function to run on a pool thread with the calling thread's job
+    group, description, scheduler pool and job/session tags, read now and
+    set inside the wrapped call. The wrapper is a plain frame of this
+    module, so Spark still names each job after the program line that ran
+    its action (a pyspark frame at the bottom of the thread's stack would
+    name every job after the thread pool)."""
+    sc = spark.sparkContext
+    props = {k: sc.getLocalProperty(k) for k in _JOB_PROPERTIES}
+    tags = spark.getTags()
+
+    def wrap(fn):
+        def run():
+            for k, v in props.items():
+                sc.setLocalProperty(k, v)
+            for t in tags:
+                spark.addTag(t)
+            return fn()
+
+        return run
+
+    return wrap
 
 
 def _normalize_quintuples(q: DataFrame, mode: str = "atom") -> DataFrame:
@@ -133,7 +173,11 @@ def canonicalize_kg(
 
     Stored edge rows are unioned into the batch's mention stream before
     the one edge groupBy; existing_edges_merge="union" names that merge
-    and is the only accepted value.
+    and is the only accepted value. `existing_entities` must carry its
+    stored `embedding` column (ValueError otherwise): stored entities
+    resolve against their stored vectors and are never re-embedded.
+    `temporal_empty=True` asserts every t_start/t_end array is empty and
+    raises ValueError on a nonempty one.
 
     entities: name, label, embedding array<float>
     edges:    src_name, src_label, pred, dst_name, dst_label,
@@ -143,51 +187,54 @@ def canonicalize_kg(
         raise ValueError(
             f"existing_edges_merge must be 'union', got {existing_edges_merge!r}"
         )
+    if existing_entities is not None and "embedding" not in existing_entities.columns:
+        raise ValueError(
+            "existing_entities must carry the stored `embedding` column: "
+            "stored entities resolve against their stored vectors"
+        )
     # Materialize the quintuple mention table once — it feeds entity-mention
     # distinct, predicate distinct, and the final remap; recomputing the
     # distill/extract UDF lineage per action would triple the extraction cost
     # (the reference likewise materializes extraction output before merging).
-    q = _normalize_quintuples(quintuples, cfg.mode)
-    ent_hint = pred_hint = None
-    if existing_entities is None and existing_edges is None:
-        # Fresh batch: materialize via the SAME job that gathers cardinality
-        # hints — one tiny agg over the lazily-checkpointed table (first
-        # compute materializes it) yields approximate distinct-entity/
-        # predicate counts, letting both resolutions skip their path-decision
-        # count job and collect directly (see resolve_items n_items_hint —
-        # approximation only picks between output-equivalent physical paths).
-        q = q.localCheckpoint(eager=False)
-        st = q.agg(
-            F.approx_count_distinct(
-                F.struct("subj_name", "subj_label")
-            ).alias("ns"),
-            F.approx_count_distinct(
-                F.struct("obj_name", "obj_label")
-            ).alias("no"),
-            F.approx_count_distinct("pred").alias("np"),
-        ).first()
-        ent_hint = int(st["ns"]) + int(st["no"])
-        pred_hint = int(st["np"])
-    else:
-        q = q.localCheckpoint()
+    # The SAME job gathers cardinality hints — one tiny agg over the lazily
+    # checkpointed table (first compute materializes it) yields approximate
+    # distinct-entity/predicate counts, letting both resolutions skip their
+    # path-decision count job and collect directly (see resolve_items
+    # n_items_hint — approximation only picks between output-equivalent
+    # physical paths) — and checks the caller's temporal_empty assertion.
+    q = _normalize_quintuples(quintuples, cfg.mode).localCheckpoint(eager=False)
+    hints = [
+        F.approx_count_distinct(F.struct("subj_name", "subj_label")).alias("ns"),
+        F.approx_count_distinct(F.struct("obj_name", "obj_label")).alias("no"),
+        F.approx_count_distinct("pred").alias("np"),
+    ]
+    if temporal_empty:
+        hints.append(
+            F.max(F.greatest(F.size("t_start"), F.size("t_end"))).alias("nt")
+        )
+    st = q.agg(*hints).first()
+    if temporal_empty and (st["nt"] or 0) > 0:
+        raise ValueError(
+            "temporal_empty=True but the quintuples carry a nonempty "
+            "t_start/t_end array; pass temporal_empty=False to parse them"
+        )
+    ent_hint = int(st["ns"]) + int(st["no"])
+    pred_hint = int(st["np"])
 
     def _resolve_entities():
-        ents = _entity_mentions(q).withColumn("is_existing", F.lit(False))
+        # Only batch keys absent from the store are embedded and resolved;
+        # a batch key equal to a stored key IS the stored row (exact-match
+        # pre-pass, matcher.py:41-63), and the stored rows join as a
+        # streamed candidate side with their stored vectors.
+        ents = _entity_mentions(q)
+        store = None
         if existing_entities is not None:
-            ex = (
-                existing_entities.select("name", "label")
-                .withColumn("is_existing", F.lit(True))
-                .withColumn(
-                    "first_seen",
-                    F.lit(None).cast(ents.schema["first_seen"].dataType),
-                )
+            ents = ents.join(
+                existing_entities.select("name", "label"), ["name", "label"],
+                "left_anti",
             )
-            # batch rows that exactly equal a store row are dropped in favor
-            # of the store row (exact-match pre-pass, matcher.py:41-63)
-            ents = ex.unionByName(
-                ents.join(
-                    ex.select("name", "label"), ["name", "label"], "left_anti"
-                )
+            store = existing_entities.select(
+                "name", "label", unit(F.col("embedding")).alias("emb")
             )
         ents = embed_entities(
             ents, embedder, cfg.embed.name_weight, cfg.embed.label_weight
@@ -201,6 +248,7 @@ def canonicalize_kg(
             order_col="first_seen",
             emb_dim=cfg.embed.dim,
             n_items_hint=ent_hint,
+            store=store,
         )
 
     def _resolve_predicates():
@@ -208,21 +256,17 @@ def canonicalize_kg(
             q.select("pred", _mention_order().alias("__ord"))
             .groupBy("pred")
             .agg(F.min("__ord").alias("first_seen"))
-            .withColumn("is_existing", F.lit(False))
         )
+        store = None
         if existing_edges is not None:
-            exp = (
-                existing_edges.select(F.col("pred"))
-                .distinct()
-                .withColumn("is_existing", F.lit(True))
-                .withColumn(
-                    "first_seen",
-                    F.lit(None).cast(preds.schema["first_seen"].dataType),
-                )
-            )
-            preds = exp.unionByName(
-                preds.join(exp.select("pred"), ["pred"], "left_anti")
-            )
+            # stored predicates carry no vector in the snapshot: they are
+            # re-embedded (a dozen distinct names) on the candidate side,
+            # which runs only when the batch brings a new predicate
+            stored = existing_edges.select("pred").distinct()
+            preds = preds.join(stored, ["pred"], "left_anti")
+            store = stored.withColumn(
+                "embedding", embedder.udf()(F.col("pred"))
+            ).select("pred", unit(F.col("embedding")).alias("emb"))
         # table is already distinct on pred — embed directly, one stage
         preds = preds.withColumn("embedding", embedder.udf()(F.col("pred")))
         preds = preds.withColumn("emb", unit(F.col("embedding")))
@@ -235,26 +279,31 @@ def canonicalize_kg(
             order_col="first_seen",
             emb_dim=cfg.embed.dim,
             n_items_hint=pred_hint,
+            store=store,
         )
 
     # Entity and predicate resolution are independent chains of small jobs
-    # (checkpoint/count/CC iterations); running them on two driver threads
+    # (collect/scoring/CC iterations); running them on two driver threads
     # overlaps their serial latencies — Spark schedules concurrent jobs fine.
-    # The pool threads take on the caller's local properties (job group,
-    # description, scheduler pool) and session tags.
-    inherit = inheritable_thread_target(quintuples.sparkSession)
+    run = _in_caller_context(quintuples.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fe = pool.submit(inherit(_resolve_entities))
-        fp = pool.submit(inherit(_resolve_predicates))
+        fe = pool.submit(run(_resolve_entities))
+        fp = pool.submit(run(_resolve_predicates))
         resolved_e = fe.result()
         resolved_p = fp.result()
 
+    # the maps cover the batch's new keys only; every other batch key is a
+    # stored key and maps to itself (the remap's left joins + coalesce)
     ent_map = resolved_e.select("name", "label", "canon_name", "canon_label")
-    entities = resolved_e.where("is_rep").select(
-        F.col("canon_name").alias("name"),
-        F.col("canon_label").alias("label"),
-        "embedding",
-    )
+    entities = resolved_e.where("is_rep").select("name", "label", "embedding")
+    if existing_entities is not None:
+        # stored entities pass through unchanged; coalescing to the stored
+        # table's partition count keeps the snapshot's file count from
+        # growing by the new representatives' partitions every batch
+        stored = existing_entities.select("name", "label", "embedding")
+        entities = stored.unionByName(entities).coalesce(
+            stored.rdd.getNumPartitions()
+        )
     pred_map = resolved_p.select("pred", "canon_pred")
 
     # ---- remap + temporal aggregation ---------------------------------------
@@ -293,16 +342,20 @@ def canonicalize_kg(
         )
     else:
         q_parsed = parse_timestamp_array_columns(q, ["t_start", "t_end"])
+    # a mention with a null key has no canonical endpoint or predicate and
+    # drops out (the left joins below would keep it)
+    keys = ["subj_name", "subj_label", "pred", "obj_name", "obj_label"]
     mentions = (
-        q_parsed.join(F.broadcast(sm), ["subj_name", "subj_label"])
-        .join(F.broadcast(om), ["obj_name", "obj_label"])
-        .join(F.broadcast(pred_map), ["pred"])
+        q_parsed.dropna(subset=keys)
+        .join(F.broadcast(sm), ["subj_name", "subj_label"], "left")
+        .join(F.broadcast(om), ["obj_name", "obj_label"], "left")
+        .join(F.broadcast(pred_map), ["pred"], "left")
         .select(
-            "src_name",
-            "src_label",
-            F.col("canon_pred").alias("pred"),
-            "dst_name",
-            "dst_label",
+            F.coalesce("src_name", "subj_name").alias("src_name"),
+            F.coalesce("src_label", "subj_label").alias("src_label"),
+            F.coalesce("canon_pred", "pred").alias("pred"),
+            F.coalesce("dst_name", "obj_name").alias("dst_name"),
+            F.coalesce("dst_label", "obj_label").alias("dst_label"),
             F.array(F.col("obs_ts").cast("double")).alias("t_obs"),
             "t_start",
             "t_end",

@@ -4,45 +4,109 @@ components -> deterministic representative per cluster.
 
 Semantic core reproduced (SURVEY.md §2.7; matcher.py:176-232):
   (i)  exact key equality unifies items — free here, items are already
-       distinct on their key so equal items share one row;
+       distinct on their key so equal items share one row, and a batch key
+       that is already stored is the stored row;
   (ii) cosine >= θ links an item to its best-scoring match (the reference's
-       argmax-per-item, matcher.py:73-94); components of the best-match graph
+       argmax-per-item, matcher.py:73-94; ties go to the smallest
+       id = xxhash64(key) on every path); components of the best-match graph
        are the order-free closure of the reference's iterated pairwise merge;
   (iii) on a match the *existing/global* object wins (matcher.py:81-87 keeps
        the entities2 object; matcher.py:152 renames rels1 to rels2's name) —
-       representatives prefer `is_existing`, then the earliest-seen surface
+       representatives prefer the stored row, then the earliest-seen surface
        form (the reference's merge tree folds facts in input order, so the
        accumulated left side's form survives), then lexicographic keys.
 
-Two physical strategies, chosen by distinct-item count (mirroring Spark's own
+Incremental shape: stored rows are a candidate side only. Links originate
+only from batch rows (the reference's argmax runs batch-against-store,
+matcher.py:65-94), so a component holds at most one stored row, which is its
+representative, and a stored row always maps to itself. Only the batch rows
+are resolved and returned; the stored side is streamed against the batch,
+never collected, never scored against itself, and never carried through the
+linking or representative windows.
+
+Two physical strategies, chosen by the number of batch (non-store) rows,
+which is the n x n the driver path holds (mirroring Spark's own
 small-side/broadcast reasoning):
 
-  * driver path (n <= broadcast_limit): ONE Spark action — an over-fetched
-    limit(n+1) collect of the full item rows that both picks the path and
-    feeds it — then a BLAS n x n cosine, argmax linking, union-find,
-    representative pick (microseconds of driver CPU), with the result built
-    as a LocalRelation so downstream consumers never re-execute upstream
-    lineage. A batch's distinct entity set is orders of magnitude smaller
-    than its mention table, so this is the common case; the latency-critical
-    serial path of every batch stays at ~2 jobs.
-  * distributed path (n > broadcast_limit): LSH-banded candidate join +
-    vectorized cosine verify + iterative DataFrame connected components
-    (merge/components.py) + window-based representative selection. Unbounded
-    scale; only engaged when the distinct set genuinely cannot sit on the
-    driver (10^8+ distinct names).
+  * driver path (n <= broadcast_limit): one collect of the batch rows, a
+    BLAS n x n cosine among them, one streamed job that scores every stored
+    row against the broadcast batch matrix and returns each batch row's best
+    stored match, then argmax linking, union-find and the representative
+    pick on the driver, with the result built as a LocalRelation so
+    downstream consumers never re-execute upstream lineage. A batch's
+    distinct entity set is orders of magnitude smaller than its mention
+    table, so this is the common case.
+  * distributed path (n > broadcast_limit): bipartite candidate pairs from
+    every batch row to the batch and the stored rows (the batch broadcast or
+    LSH-banded, the rest streamed) + vectorized cosine verify + iterative
+    DataFrame connected components (merge/components.py) over the batch ids
+    and the stored ids they touch + a window-based representative pick over
+    batch rows. Unbounded scale.
 
-Both return the same schema: items' columns + comp, is_rep, canon_<key>.
+Both return the same schema: the batch rows' columns + comp (the
+representative's id), is_rep, canon_<key>.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from itext2kg_spark.config import MatchConfig
-from itext2kg_spark.merge.candidates import candidate_pairs
+from itext2kg_spark.merge.candidates import (
+    TIE_DECIMALS,
+    _broadcast_pairs,
+    candidate_pairs,
+)
 from itext2kg_spark.merge.components import _driver_union_find, connected_components
+
+
+def _order_key(row, key_cols: list[str], order_col: str | None):
+    """Representative / fold order of a batch row: first_seen asc (nulls
+    last), keys asc. Stored rows precede every batch row."""
+    first_seen = row[order_col] if order_col else None
+    if first_seen is None:
+        mid = (1,)
+    else:
+        try:  # struct order cols (e.g. (url, fact_idx)) vs plain scalars
+            mid = (0, tuple(first_seen))
+        except TypeError:
+            mid = (0, (first_seen,))
+    return (mid, tuple(row[c] for c in key_cols))
+
+
+def _store_best(
+    store: DataFrame,
+    ids: np.ndarray,
+    mat: np.ndarray,
+    key_cols: list[str],
+    emb_col: str,
+    threshold: float,
+    inclusive: bool,
+    link_mode: str,
+) -> dict[int, tuple]:
+    """Best stored match of each batch row: one job streams the stored rows
+    against the broadcast batch matrix and returns, per batch id, only its
+    best-scoring stored rows. Ties go to the smallest stored id in `best`
+    mode and to the smallest key (the fold's leader order) in `leader` mode.
+    Returns batch id -> (sim, stored id, stored keys)."""
+    probe = store.select(
+        F.xxhash64(*key_cols).alias("id"), F.col(emb_col).alias("emb"), *key_cols
+    )
+    tie = 1 if link_mode == "best" else 2
+    best: dict[int, tuple] = {}
+    for r in _broadcast_pairs(
+        probe, ids, mat, threshold, inclusive, bipartite=True, top=True
+    ).collect():
+        keys = tuple(r[c] for c in key_cols)
+        cand = (float(np.round(r["sim"], TIE_DECIMALS)), r["id_b"], keys)
+        cur = best.get(r["id_a"])
+        if cur is None or (-cand[0], cand[tie]) < (-cur[0], cur[tie]):
+            best[r["id_a"]] = cand
+    return best
 
 
 def _driver_resolve(
@@ -50,98 +114,98 @@ def _driver_resolve(
     key_cols: list[str],
     threshold: float,
     inclusive: bool,
-    has_existing: bool,
     order_col: str | None,
-    link_mode: str = "best",
-    emb_col: str = "emb",
-):
-    """numpy/union-find resolution over collected rows; returns list of
-    (key..., comp, is_rep, canon_key...) tuples aligned with input order."""
+    link_mode: str,
+    emb_col: str,
+    store: DataFrame | None,
+) -> list[tuple]:
+    """numpy/union-find resolution of the collected batch rows (each with
+    its `__id`, sorted by it); returns (comp, is_rep, canon keys...) per
+    row, aligned with `rows`."""
     n = len(rows)
     if n == 0:
         return []
-    keys = [tuple(r[c] for c in key_cols) for r in rows]
+    ids = np.asarray([r["__id"] for r in rows], dtype=np.int64)
     mat = np.asarray([np.asarray(r[emb_col], dtype=np.float64) for r in rows])
-    exist = (
-        np.asarray([bool(r["is_existing"]) for r in rows])
-        if has_existing
-        else np.zeros(n, dtype=bool)
+    keys = [tuple(r[c] for c in key_cols) for r in rows]
+    store_best = (
+        {}
+        if store is None
+        else _store_best(
+            store, ids, mat, key_cols, emb_col, threshold, inclusive, link_mode
+        )
     )
 
     sims = mat @ mat.T
     np.fill_diagonal(sims, -np.inf)
     ok = sims >= threshold if inclusive else sims > threshold
-    if has_existing:
-        ok &= ~(exist[:, None] & exist[None, :])
-    sims_masked = np.where(ok, sims, -np.inf)
+    sims = np.where(ok, np.round(sims, TIE_DECIMALS), -np.inf)
 
-    # representative ordering: is_existing desc, first_seen asc (nulls
-    # last), keys asc — shared by the leader fold and the rep selection
-    def order_key(i: int):
-        first_seen = rows[i][order_col] if order_col else None
-        if first_seen is None:
-            mid = (1,)
-        else:
-            try:  # struct order cols (e.g. (url, fact_idx)) vs plain scalars
-                mid = (0, tuple(first_seen))
-            except TypeError:
-                mid = (0, (first_seen,))
-        return (0 if exist[i] else 1, mid, keys[i])
-
+    # link of row i: a batch row index, or a (sim, id, keys) stored match
+    links: dict[int, int | tuple] = {}
     if link_mode == "leader":
         # EXACT sequential-fold parity (matcher.py _batch_match_entities
         # applied item-by-item in arrival order, the iText2KG/star accumulate
         # loop): each item matches against the current SURVIVOR set only —
         # an absorbed item's surface form leaves the pool, so chains
         # (a~b, b~c, a≁c) never merge a and c, unlike connected components.
-        # Store rows are the initial global list; batch rows fold in
-        # first_seen order. argmax tie-break = leader insertion order,
-        # identical to np.argmax over the reference's global list.
-        fold_order = sorted(range(n), key=order_key)
-        leaders: list[int] = [i for i in fold_order if exist[i]]
-        pairs = []
-        for i in fold_order:
-            if exist[i]:
-                continue
+        # Stored rows are the initial leader list and stay leaders, so a
+        # stored match wins a tie against any batch leader; batch rows fold
+        # in first_seen order, argmax tie-break = leader insertion order.
+        leaders: list[int] = []
+        fold = sorted(range(n), key=lambda i: _order_key(rows[i], key_cols, order_col))
+        for i in fold:
+            j = None
             if leaders:
-                s = sims_masked[i, leaders]
-                j = int(np.argmax(s))
-                if s[j] > -np.inf:
-                    pairs.append((i, leaders[j]))
-                    continue
-            leaders.append(i)
+                s = sims[i, leaders]
+                k = int(np.argmax(s))
+                if s[k] > -np.inf:
+                    j = leaders[k]
+            st = store_best.get(int(ids[i]))
+            if st is not None and (j is None or st[0] >= sims[i, j]):
+                links[i] = st
+            elif j is not None:
+                links[i] = j
+            else:
+                leaders.append(i)
     else:
-        # best-match link per item (argmax with min-index tie-break, like
-        # the window orderBy sim desc, id asc in the distributed path)
-        best = sims_masked.argmax(axis=1)
-        linked = sims_masked[np.arange(n), best] > -np.inf
-        if has_existing:
-            # Links originate ONLY from batch rows: the reference computes
-            # argmax for entities1 (batch) against entities2 (store), never
-            # the reverse (matcher.py:65-94). A store row originating its own
-            # best-match link could bridge two store entities through one
-            # batch entity, demoting a store row and corrupting the
-            # incremental store.
-            linked &= ~exist
-        pairs = [(int(i), int(best[i])) for i in np.nonzero(linked)[0]]
+        # best-match link per row: (sim desc, id asc) over the batch rows
+        # (rows are id-sorted, so argmax's first index is the smallest id)
+        # and the best stored match
+        best = sims.argmax(axis=1)
+        for i in range(n):
+            j = int(best[i])
+            st = store_best.get(int(ids[i]))
+            if st is not None and (-st[0], st[1]) < (-sims[i, j], ids[j]):
+                links[i] = st
+            elif sims[i, j] > -np.inf:
+                links[i] = j
 
-    comp_map = _driver_union_find(pairs)
-    comps = [comp_map.get(i, i) for i in range(n)]
-
-    # representative per component: min by order_key (is_existing desc,
-    # first_seen asc nulls-last, keys asc) — in leader mode this is exactly
-    # the fold's surviving leader
+    # union-find over ids: the batch rows' and the stored rows they link to
+    stored_keys: dict[int, tuple] = {}  # stored id -> keys
+    pairs = []
+    for i, t in links.items():
+        if isinstance(t, tuple):
+            stored_keys[t[1]] = t[2]
+            pairs.append((int(ids[i]), t[1]))
+        else:
+            pairs.append((int(ids[i]), int(ids[t])))
+    root = _driver_union_find(pairs)
+    # a component holds at most one stored row (each batch row has one
+    # out-link and stored rows none), and that row is its representative
+    stored_rep = {root[sid]: (sid, k) for sid, k in stored_keys.items()}
     members: dict[int, list[int]] = {}
-    for i, c in enumerate(comps):
-        members.setdefault(c, []).append(i)
-    rep_of = {}
-    for c, idxs in members.items():
-        rep_of[c] = min(idxs, key=order_key)
-
-    out = []
     for i in range(n):
-        rep = rep_of[comps[i]]
-        out.append(keys[i] + (comps[i], i == rep) + keys[rep])
+        members.setdefault(root.get(int(ids[i]), int(ids[i])), []).append(i)
+    out: list[tuple] = [()] * n
+    for c, idxs in members.items():
+        if c in stored_rep:
+            (rep_id, rep_keys), rep = stored_rep[c], None
+        else:
+            rep = min(idxs, key=lambda i: _order_key(rows[i], key_cols, order_col))
+            rep_id, rep_keys = int(ids[rep]), keys[rep]
+        for i in idxs:
+            out[i] = (rep_id, i == rep) + rep_keys
     return out
 
 
@@ -216,7 +280,7 @@ def _distributed_leader(
         # best decided-leader target per ready src (fold argmax: sim desc,
         # leader-insertion order = ord asc)
         wbest = Window.partitionBy("src").orderBy(
-            F.col("sim").desc(), F.col("dst_ord").asc()
+            F.round("sim", TIE_DECIMALS).desc(), F.col("dst_ord").asc()
         )
         best = (
             cd.join(ready, "src", "left_semi")
@@ -256,16 +320,22 @@ def resolve_items(
     order_col: str | None = None,
     emb_dim: int | None = None,
     n_items_hint: int | None = None,
+    store: DataFrame | None = None,
 ) -> DataFrame:
     """items(key_cols..., emb [, is_existing][, order_col]) ->
     items + (comp, is_rep) + canonical keys `canon_<key>`.
 
     `emb` must be unit-normalized. Items cluster when connected through
     best-match links at cosine >= threshold (ATOM) / > threshold (star).
-    Optional flag column `is_existing` marks canonical-store rows; they
-    never ORIGINATE links (reference argmax runs batch-against-store only,
-    matcher.py:65-94), so a component contains at most one store entity and
-    store rows always canonicalize to themselves.
+    `store(key_cols..., emb)` holds the canonical-store rows, disjoint from
+    `items` on the key: they are candidates only, never ORIGINATE links
+    (reference argmax runs batch-against-store only, matcher.py:65-94), so
+    a component contains at most one store row and store rows always
+    canonicalize to themselves. Only `items` rows are returned.
+    Store rows may instead be marked inside `items` with a boolean
+    `is_existing` column; they are split off as `store` and come back
+    mapped to themselves (comp = their id, is_rep, canon = own key).
+    `n_items` / `n_items_hint` count the non-store rows.
     `emb_dim` (vector width) byte-bounds the driver-collect path — without it
     the limit is row-count-only.
     `n_items_hint` — an approximate cardinality from the caller (e.g. one
@@ -276,14 +346,32 @@ def resolve_items(
     estimator error cannot change results — at worst the collect carries a
     few percent more rows than the byte budget assumed.
     """
-    has_existing = "is_existing" in items.columns
+    if "is_existing" in items.columns:
+        if store is not None:
+            raise ValueError("pass stored rows as `store` or `is_existing`, not both")
+        ex = F.col("is_existing")
+        resolved = resolve_items(
+            items.where(~ex).drop("is_existing"), cfg, threshold, key_cols,
+            emb_col, n_items, order_col, emb_dim, n_items_hint,
+            store=items.where(ex).select(*key_cols, emb_col),
+        ).withColumn("is_existing", F.lit(False))
+        stored = items.where(ex).select(
+            "*",
+            F.xxhash64(*key_cols).alias("comp"),
+            F.lit(True).alias("is_rep"),
+            *[F.col(c).alias(f"canon_{c}") for c in key_cols],
+        )
+        return stored.unionByName(resolved)
+
     spark = items.sparkSession
+    out_cols = items.columns + ["comp", "is_rep"] + [f"canon_{c}" for c in key_cols]
 
     # Budget TWO vectors per collected row: the full-row collect carries both
     # the raw `embedding` and the unit `emb` column for the entity/predicate
     # tables (budgeting one vector would let driver heap reach ~2x the
     # configured byte ceiling at wide embedding dims).
     limit = cfg.effective_broadcast_limit(2 * emb_dim if emb_dim else None)
+    keyed = items.withColumn("__id", F.xxhash64(*key_cols))
     rows = None
     if n_items is None:
         # Path decision via a count whose plan PRUNES the embedding columns
@@ -299,35 +387,29 @@ def resolve_items(
             n_items_hint is not None
             and n_items_hint * 1.2 + 100 <= limit
         ):
-            rows = items.collect()
+            rows = keyed.collect()
             n_items = len(rows)
         else:
             n_items = items.count()
 
     if n_items <= limit:
         if rows is None:
-            rows = items.collect()
+            rows = keyed.collect()
+        rows.sort(key=lambda r: r["__id"])
         resolved = _driver_resolve(
             rows,
             key_cols,
             threshold,
             cfg.inclusive,
-            has_existing,
             order_col,
-            link_mode=cfg.link_mode,
-            emb_col=emb_col,
+            cfg.link_mode,
+            emb_col,
+            store,
         )
         # Build the output entirely on the driver: the collected rows already
         # carry every item column, so the result is a local relation — no
         # join-back, no re-execution of the upstream lineage, no checkpoint.
         # Downstream broadcast joins see a LocalRelation small side.
-        from pyspark.sql.types import (
-            BooleanType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
         key_fields = {f.name: f for f in items.schema.fields}
         schema = StructType(
             list(items.schema.fields)
@@ -340,25 +422,26 @@ def resolve_items(
                 for c in key_cols
             ]
         )
-        k = len(key_cols)
-        out_rows = [tuple(r) + res[k:] for r, res in zip(rows, resolved)]
+        out_rows = [tuple(r)[:-1] + res for r, res in zip(rows, resolved)]
         # Ship the local relation through Arrow (pandas input) rather than
         # the pickle parallelize path: every downstream consumer job (each
         # broadcast-map build, the entities projection) re-reads this data,
         # and the Arrow path measured ~2.5x faster per consumer. Fall back
         # to the row-list path for types Arrow can't convert.
         try:
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                out_rows, columns=[f.name for f in schema.fields]
-            )
+            pdf = pd.DataFrame(out_rows, columns=out_cols)
             return spark.createDataFrame(pdf, schema)
         except Exception:  # noqa: BLE001 — conversion is a perf fast path
             return spark.createDataFrame(out_rows, schema)
 
     # ---- distributed path ----------------------------------------------------
-    with_id = items.withColumn("id", F.xxhash64(*key_cols)).localCheckpoint()
+    with_id = keyed.withColumnRenamed("__id", "id").localCheckpoint()
+    # directed candidate links: every batch row (broadcast / banded side) to
+    # every other batch row and every stored row (streamed side)
+    right = with_id.select("id", emb_col)
+    if store is not None:
+        store = store.select(F.xxhash64(*key_cols).alias("id"), *key_cols, emb_col)
+        right = right.unionByName(store.select("id", emb_col))
     pairs = candidate_pairs(
         with_id,
         cfg,
@@ -367,13 +450,12 @@ def resolve_items(
         id_col="id",
         n_items=n_items,
         emb_dim=emb_dim,
+        right=right,
     )
-    order = []
-    if has_existing:
-        order.append(F.col("is_existing").desc())
+    batch_order = []
     if order_col is not None:
-        order.append(F.col(order_col).asc_nulls_last())
-    order += [F.col(c).asc() for c in key_cols]
+        batch_order.append(F.col(order_col).asc_nulls_last())
+    batch_order += [F.col(c).asc() for c in key_cols]
 
     if cfg.link_mode == "leader":
         if n_items > cfg.leader_sort_limit:
@@ -384,32 +466,40 @@ def resolve_items(
                 f"order-free default link_mode='best' (raise "
                 f"MatchConfig.leader_sort_limit to override)"
             )
+        # fold nodes: the batch rows plus the stored rows a pair touches,
+        # which lead from the start (they sort first)
+        nodes = with_id.select(
+            "id", *key_cols, *([order_col] if order_col else []),
+            F.lit(False).alias("__stored"),
+        )
+        if store is not None:
+            pairs = pairs.localCheckpoint()
+            touched = store.join(
+                pairs.select(F.col("id_b").alias("id")).distinct(), "id", "left_semi"
+            )
+            nodes = nodes.unionByName(
+                touched.select(
+                    "id", *key_cols,
+                    *([F.lit(None).alias(order_col)] if order_col else []),
+                    F.lit(True).alias("__stored"),
+                )
+            )
         comp = _distributed_leader(
-            with_id, pairs, order, max_iter=cfg.cc_max_iter
+            nodes, pairs, [F.col("__stored").desc(), *batch_order],
+            max_iter=cfg.cc_max_iter,
         )
     else:
-        # Keep only each node's single best-scoring link (argmax parity with
-        # the reference; weak non-best pairs above θ never form links there,
-        # so including them would transitively over-merge distinct clusters
-        # that share one borderline bridge pair).
-        directed = pairs.select(
-            F.col("id_a").alias("v"), F.col("id_b").alias("w"), "sim"
-        ).union(
-            pairs.select(F.col("id_b").alias("v"), F.col("id_a").alias("w"), "sim")
+        # Keep only each batch row's single best-scoring link (argmax parity
+        # with the reference; weak non-best pairs above θ never form links
+        # there, so including them would transitively over-merge distinct
+        # clusters that share one borderline bridge pair).
+        wbest = Window.partitionBy("id_a").orderBy(
+            F.round("sim", TIE_DECIMALS).desc(), F.col("id_b").asc()
         )
-        if has_existing:
-            # links originate only from batch rows (see _driver_resolve):
-            # store rows keep in-degree but never out-degree, so no two store
-            # rows can land in one component.
-            nonexist = with_id.where(~F.col("is_existing")).select(
-                F.col("id").alias("v")
-            )
-            directed = directed.join(nonexist, "v", "left_semi")
-        wbest = Window.partitionBy("v").orderBy(F.col("sim").desc(), F.col("w").asc())
         best = (
-            directed.withColumn("__rn", F.row_number().over(wbest))
+            pairs.withColumn("__rn", F.row_number().over(wbest))
             .where(F.col("__rn") == 1)
-            .select(F.col("v").alias("id_a"), F.col("w").alias("id_b"), "sim")
+            .select("id_a", "id_b")
         )
         comp = connected_components(
             with_id.select("id"), best, max_iter=cfg.cc_max_iter
@@ -417,13 +507,35 @@ def resolve_items(
     labeled = with_id.join(comp, "id", "left").withColumn(
         "comp", F.coalesce(F.col("comp"), F.col("id"))
     )
-
-    w = Window.partitionBy("comp").orderBy(*order)
+    w = Window.partitionBy("comp").orderBy(*batch_order)
     ranked = labeled.withColumn("__rn", F.row_number().over(w))
-
     reps = ranked.where(F.col("__rn") == 1).select(
-        F.col("comp"), *[F.col(c).alias(f"canon_{c}") for c in key_cols]
+        "comp",
+        F.col("id").alias("__rep"),
+        *[F.col(c).alias(f"canon_{c}") for c in key_cols],
     )
-    return ranked.withColumn("is_rep", F.col("__rn") == 1).drop("__rn").join(
-        reps, "comp"
+    if store is not None:
+        # the stored row of a component (at most one) is its representative
+        stored_rep = (
+            comp.join(with_id.select("id"), "id", "left_anti")
+            .join(store.select("id", *key_cols), "id")
+            .select(
+                "comp",
+                F.col("id").alias("__srep"),
+                *[F.col(c).alias(f"__s_{c}") for c in key_cols],
+            )
+        )
+        reps = reps.join(stored_rep, "comp", "left").select(
+            "comp",
+            F.coalesce("__srep", "__rep").alias("__rep"),
+            *[
+                F.coalesce(f"__s_{c}", f"canon_{c}").alias(f"canon_{c}")
+                for c in key_cols
+            ],
+        )
+    return (
+        ranked.join(reps, "comp")
+        .withColumn("is_rep", F.col("id") == F.col("__rep"))
+        .withColumn("comp", F.col("__rep"))
+        .select(*out_cols)
     )

@@ -331,3 +331,82 @@ def test_empty_batch_build_graph(spark):
     e2, d2 = pipe.build_graph(empty, prev_e, prev_d)
     assert e2.count() == prev_e.count()
     assert sorted(map(tuple, d2.collect())) == sorted(map(tuple, prev_d.collect()))
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_best_tie_goes_to_smallest_id_in_any_row_order(spark, path):
+    """HashEmbedder gives token permutations with one label identical
+    vectors, so stored "john smith" and "smith john" tie exactly for the
+    batch row "john smyth". Both paths, in both row orders, link it to the
+    tied row with the smallest id = xxhash64(name, label), however the rows
+    are partitioned."""
+    import numpy as np
+
+    from itext2kg_spark.config import MatchConfig
+    from itext2kg_spark.merge.resolve import resolve_items
+
+    names = ["john smith", "smith john", "john smyth"]
+    vecs = 0.8 * EMB(names).astype(float) + 0.2 * EMB(["person"]).astype(float)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    assert np.array_equal(vecs[0], vecs[1])
+    rows = [
+        (n, "person", [float(x) for x in v], n != "john smyth", i)
+        for i, (n, v) in enumerate(zip(names, vecs))
+    ]
+    schema = (
+        "name string, label string, emb array<double>, is_existing boolean,"
+        " first_seen long"
+    )
+    cfg = (
+        MatchConfig()
+        if path == "driver"
+        else MatchConfig(broadcast_limit=0, candidate_method="broadcast")
+    )
+    got = set()
+    for order in (rows, rows[::-1]):
+        for parts in (1, 3):  # one or three BLAS blocks score the tie
+            out = resolve_items(
+                spark.createDataFrame(order, schema).coalesce(parts), cfg, 0.45,
+                key_cols=["name", "label"], order_col="first_seen",
+            )
+            canon = {r["name"]: r["canon_name"] for r in out.collect()}
+            assert canon["john smith"] == "john smith"
+            assert canon["smith john"] == "smith john"
+            got.add(canon["john smyth"])
+    ids = spark.createDataFrame(rows[:2], schema).select(
+        "name", F.xxhash64("name", "label").alias("id")
+    )
+    assert got == {min(ids.collect(), key=lambda r: r["id"])["name"]}
+
+
+def test_resolve_jobs_keep_their_call_site(spark):
+    """The resolve threads take on the caller's job properties without a
+    pyspark frame at the bottom of their stack, so each job's stage is
+    named after the program line that ran it, not after the thread pool."""
+    rows1 = [
+        q("u1", OBS1, 0, "f1", "acme corp inc", "Company", "acquired",
+          "globex labs", "Company"),
+    ]
+    rows2 = [
+        q("u2", OBS2, 0, "f2", "acme corp", "Company", "acquired",
+          "initech", "Company"),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("kg-callsite", "kg build")
+    try:
+        store = build(spark, rows1)
+        store = store[0].localCheckpoint(), store[1].localCheckpoint()
+        ents, edges = build(spark, rows2, existing=store)
+        assert ents.count() == 3 and edges.count() == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    names = []
+    for job in tracker.getJobIdsForGroup("kg-callsite"):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None:
+                names.append(info.name)
+    assert not [n for n in names if n.startswith("wrapped at")], names
+    assert any("merge/resolve.py" in n for n in names), names

@@ -112,27 +112,31 @@ def test_lsh_candidate_recall_against_broadcast(spark):
     df = spark.createDataFrame(rows, "id long, emb array<float>").withColumn(
         "emb", unit(F.col("emb").cast("array<double>"))
     )
-    # second input: every even id is a store row, so the LSH path's
-    # is_existing gate must drop each store-store pair
-    gated = df.withColumn("is_existing", F.col("id") % 2 == 0)
+    # bipartite form: the odd ids (a batch) against every id (batch and the
+    # even-id store rows), so no pair can have two store ends
+    batch = df.where(F.col("id") % 2 == 1)
 
-    def pairs(items, method):
-        out = candidate_pairs(items, MatchConfig(candidate_method=method), 0.8)
+    def pairs(items, method, right=None):
+        out = candidate_pairs(
+            items, MatchConfig(candidate_method=method), 0.8, right=right
+        )
         return {(r["id_a"], r["id_b"]) for r in out.collect()}
 
     def store_store(ps):
         return {(a, b) for a, b in ps if a % 2 == 0 and b % 2 == 0}
 
     lsh = {}
-    for name, items in (("plain", df), ("gated", gated)):
-        e, l = pairs(items, "broadcast"), pairs(items, "lsh")
+    for name, items, right in (("plain", df, None), ("bipartite", batch, df)):
+        e, l = pairs(items, "broadcast", right), pairs(items, "lsh", right)
         assert len(e) > 0
         recall = len(e & l) / len(e)
         assert recall >= 0.99, f"{name}: LSH recall {recall}"
         assert l <= e  # exact-cosine verification removes false candidates
         lsh[name] = l
-    assert store_store(lsh["plain"])  # the gate has pairs to drop
-    assert not store_store(lsh["gated"])
+    assert store_store(lsh["plain"])  # the plain input has store-store pairs
+    assert all(a % 2 == 1 and a != b for a, b in lsh["bipartite"])
+    # both directions of a batch-batch pair, one of each batch-store pair
+    assert {(b, a) for a, b in lsh["bipartite"] if b % 2 == 1} <= lsh["bipartite"]
 
 
 def _plan_nodes(node):

@@ -222,3 +222,30 @@ def test_token_budget_mix_plan_partitioned_windows(spark):
     assert "__bucket" in plan
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_temporal_empty_is_checked_and_plans_no_python_parse(spark):
+    """temporal_empty=True is the caller's promise that every t_start/t_end
+    array is empty; a nonempty one fails loudly instead of being dropped.
+    The token path keeps that promise, and its edge plan carries no Python
+    timestamp-parse stage."""
+    import pytest
+
+    from itext2kg_spark.config import ATOM
+    from itext2kg_spark.extract.embed import HashEmbedder
+    from itext2kg_spark.merge.kg import canonicalize_kg
+    from tests.kg_helpers import quintuples_df
+
+    row = {
+        "url": "u1", "obs_ts": None, "lang": "en", "fact_idx": 0, "fact": "f",
+        "subj_name": "a", "subj_label": "x", "pred": "p", "obj_name": "b",
+        "obj_label": "x", "t_start": [], "t_end": ["2025-01-01"],
+    }
+    with pytest.raises(ValueError, match="temporal_empty"):
+        canonicalize_kg(
+            quintuples_df(spark, [row]), ATOM, HashEmbedder(), temporal_empty=True
+        )
+    _, edges = KGPipeline(extraction="token").build_graph(synth_pages(spark, 40, seed=5))
+    plan = _plan(edges)
+    assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 0
+    assert edges.count() > 0
