@@ -1990,7 +1990,7 @@ def _q_kg_components(spark, sf_dir):
     edges = e.select(
         h(F.col("src_name")).alias("id_a"), h(F.col("dst_name")).alias("id_b")
     )
-    comp = connected_components(ids.select("id"), edges, driver_limit=0)
+    comp = connected_components(edges, driver_limit=0)
     return ids.join(comp, "id").select(
         "name", F.col("comp").cast("long").alias("component")
     )

@@ -16,6 +16,22 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+# Byte ceiling for driver-collected / broadcast embedding matrices: a row
+# limit alone ignores vector width (100k rows x 1536 dims x 8B is ~1.2 GB).
+BROADCAST_LIMIT_BYTES = 256 * 1024 * 1024
+
+# Candidate-generation broadcast->LSH row cutover — MEASURED, not asserted
+# (BENCH.md round-6 "Broadcast->LSH cutover" table): at 64-dim the exact
+# broadcast-BLAS path beats banded LSH at EVERY probed size (8k/16k/32k/64k,
+# warmed min-of-2; 3.5s vs 136s at 32k on a dup-dense corpus whose hot
+# buckets are LSH's worst case), so the row cutover sits at the top of the
+# probed range and BROADCAST_LIMIT_BYTES is what sends wide vectors
+# (1536-dim > ~21k rows) to LSH. Distinct from driver_matrix_bytes/n_quad,
+# which bounds the DRIVER-resolve n x n matrix — a constraint the chunked
+# executor-side BLAS path does not have (conflating the two is what pinned
+# the old cutover at 32,768).
+CAND_BROADCAST_ROWS = 65_536
+
 
 @dataclass(frozen=True)
 class MatchConfig:
@@ -38,42 +54,6 @@ class MatchConfig:
     # Candidate generation: "broadcast" = exact all-pairs (small side broadcast),
     # "lsh" = banded random-hyperplane bucketing, "auto" switches on count.
     candidate_method: str = "auto"
-    # Above this many distinct items per side, "auto" switches to LSH.
-    broadcast_limit: int = 100_000
-    # Byte ceiling for driver-collected embedding matrices: the row limit
-    # alone ignores vector width (100k rows x 1536 dims x 8B is ~1.2 GB).
-    # Effective limit = min(broadcast_limit, broadcast_limit_bytes/(dim*8)).
-    broadcast_limit_bytes: int = 256 * 1024 * 1024
-    # Candidate-generation broadcast->LSH row cutover — MEASURED, not
-    # asserted (BENCH.md round-6 "Broadcast->LSH cutover" table): at 64-dim
-    # the exact broadcast-BLAS path beats banded LSH at EVERY probed size
-    # (8k/16k/32k/64k, warmed min-of-2; 3.5s vs 136s at 32k on a dup-dense
-    # corpus whose hot buckets are LSH's worst case), so the row cutover
-    # sits at the top of the probed range and the BYTE ceiling above is
-    # what sends wide vectors (1536-dim > ~21k rows) to LSH. Distinct from
-    # driver_matrix_bytes/n_quad below, which bounds the DRIVER-resolve
-    # n x n matrix — a constraint the chunked executor-side BLAS path does
-    # not have (conflating the two is what pinned the old cutover at 32,768).
-    cand_broadcast_rows: int = 65_536
-    # LSH shape: `lsh_rows` sign-bits per band, `lsh_bands` bands. Recall for
-    # cosine θ: 1 - (1 - p^rows)^bands with p = 1 - arccos(θ)/π.
-    # (6, 24) gives ≥0.997 recall at θ=0.7 and ≥0.9996 at θ=0.8.
-    lsh_rows: int = 6
-    lsh_bands: int = 24
-    lsh_seed: int = 1729
-    # Connected-components iteration cap (each iteration does neighbor-min +
-    # pointer-jumping, so convergence is O(log diameter)).
-    cc_max_iter: int = 25
-
-    # Distinct-item ceiling for DISTRIBUTED leader-mode resolution: its fold
-    # rank is a global row_number (a single-partition sort of the distinct
-    # item table) and the fixpoint runs ~2 actions per chain-depth round —
-    # fine for a parity mode, pathological at extreme cardinality. Above
-    # this, resolve_items refuses with guidance to use the order-free
-    # default (link_mode="best"), rather than silently sorting 10^8 rows on
-    # one partition. The driver leader path is unaffected (it is already
-    # bounded by effective_broadcast_limit).
-    leader_sort_limit: int = 10_000_000
 
     # Byte ceiling for the driver resolution's n x n similarity matrix —
     # the collect limit alone misses that _driver_resolve is quadratic in
@@ -82,31 +62,23 @@ class MatchConfig:
     driver_matrix_bytes: int = 8 * 1024 * 1024 * 1024
 
     def effective_broadcast_limit(self, emb_dim: int | None = None) -> int:
-        """Row limit for driver-side paths: bounded by the configured row
-        count, the collected-matrix bytes (when the vector width is known),
-        and the quadratic n x n similarity-matrix budget."""
+        """Row limit for driver-side paths: bounded by the quadratic n x n
+        similarity-matrix budget and, when the vector width is known, by
+        the collected-matrix bytes."""
         n_quad = int((self.driver_matrix_bytes / 8) ** 0.5)
         if not emb_dim:
-            return min(self.broadcast_limit, n_quad)
-        return min(
-            self.broadcast_limit,
-            self.broadcast_limit_bytes // (emb_dim * 8),
-            n_quad,
-        )
+            return n_quad
+        return min(BROADCAST_LIMIT_BYTES // (emb_dim * 8), n_quad)
 
     def candidate_broadcast_limit(self, emb_dim: int | None = None) -> int:
         """Row limit for candidate_pairs' auto broadcast->LSH switch: the
-        measured cutover (cand_broadcast_rows — see its comment) and the
-        collected-matrix byte ceiling. No n_quad term: the executor-side
-        BLAS path scores in (arrow-batch x n) chunks and never builds the
-        n x n matrix that bounds the driver-resolve path."""
+        measured cutover (CAND_BROADCAST_ROWS) and the collected-matrix byte
+        ceiling. No n_quad term: the executor-side BLAS path scores in
+        (arrow-batch x n) chunks and never builds the n x n matrix that
+        bounds the driver-resolve path."""
         if not emb_dim:
-            return min(self.broadcast_limit, self.cand_broadcast_rows)
-        return min(
-            self.broadcast_limit,
-            self.cand_broadcast_rows,
-            self.broadcast_limit_bytes // (emb_dim * 8),
-        )
+            return CAND_BROADCAST_ROWS
+        return min(CAND_BROADCAST_ROWS, BROADCAST_LIMIT_BYTES // (emb_dim * 8))
 
     def __post_init__(self):
         # Both resolve paths honour exactly these values; anything else would
@@ -144,8 +116,6 @@ class PipelineConfig:
     embed: EmbedConfig = field(default_factory=EmbedConfig)
     # "atom" (quintuples with t_start/t_end) or "star" (t_obs only)
     mode: str = "atom"
-    # shuffle partitioning for the merge stages; None = leave session default
-    shuffle_partitions: int | None = None
 
 
 ATOM = PipelineConfig()

@@ -166,7 +166,7 @@ def incremental_survivors(
 
     # the batch feeds both the pair search and the verdict below: compute
     # its enrichment and exact dedup once
-    kept = _materialize(kept, "auto", size_src=new_docs)
+    kept = _materialize(kept, size_src=new_docs)
     docs = kept.select(id_col, text_col)
     if stored is not None:
         docs = stored.select(id_col, text_col).unionByName(docs)

@@ -67,9 +67,7 @@ def near_dup_components(
             )
         else:
             raise ValueError(f"unknown near-dup method: {method!r}")
-    return connected_components(
-        docs.select(F.col(id_col).alias("id")), pairs.select("id_a", "id_b")
-    )
+    return connected_components(pairs)
 
 
 def near_dup_clusters(

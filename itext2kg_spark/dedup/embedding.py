@@ -28,7 +28,7 @@ def embedding_near_dups(
         F.col(id_col).alias("id"),
         unit(F.col(emb_col).cast("array<double>")).alias("emb"),
     )
-    pairs = candidate_pairs(items, cfg, threshold, emb_col="emb", id_col="id")
+    pairs = candidate_pairs(items, cfg, threshold)
     return pairs.select(
         "id_a",
         "id_b",

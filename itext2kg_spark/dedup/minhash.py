@@ -86,9 +86,7 @@ def minhash_lsh_pairs(
     # ONE gram tokenization per run: the distinct-gram table feeds the
     # signature aggregate, the full-corpus df cutoff AND the candidate
     # verification join (previously signatures re-tokenized inside a UDF).
-    g0 = _materialize(
-        word_ngrams(docs, n, text_col, id_col), "auto", size_src=docs
-    )
+    g0 = _materialize(word_ngrams(docs, n, text_col, id_col), size_src=docs)
 
     # no checkpoint: since candidates come from a bucket groupBy (below)
     # rather than a self-join, the sig aggregate has exactly one consumer

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# "auto" materialization guard for the gram table: the table is LARGER than
+# Materialization guard for the gram table: the table is LARGER than
 # the corpus (one row per distinct n-gram occurrence post-cutoff), so
 # localCheckpoint — executor-local, non-fault-tolerant storage — is only safe
 # while it is small. Above this Catalyst-estimated size the table goes to
@@ -29,48 +29,31 @@ from pyspark.storagelevel import StorageLevel
 GRAM_LOCAL_CKPT_MAX_BYTES = 8 << 30
 
 
-def _materialize(
-    g: DataFrame, strategy: str, size_src: DataFrame | None = None
-) -> DataFrame:
-    """Gram-table materialization: the table feeds THREE plan branches
-    (per-doc sizes + both sides of the self-join), so without materialization
-    the split+explode+distinct (+ df cutoff) lineage re-executes per branch —
-    measured 2.8s -> 1.9s at sf0.1. All modes are LAZY (nothing runs until
-    the caller's first action — plan builders must stay side-effect-free);
-    "auto" picks localCheckpoint under GRAM_LOCAL_CKPT_MAX_BYTES (estimated)
-    and fault-tolerant persist(DISK_ONLY) above, "local"/"persist" force a
-    mode, "none" disables (pure lazy plan, e.g. single-branch callers)."""
-    if strategy == "none":
-        return g
-    if strategy == "auto":
-        strategy = _auto_strategy(size_src if size_src is not None else g)
-    if strategy == "local":
-        return g.localCheckpoint(eager=False)
-    if strategy == "persist":
-        return g.persist(StorageLevel.DISK_ONLY)
-    raise ValueError(f"unknown gram materialization strategy: {strategy!r}")
-
-
 _STATS_UNKNOWN = (1 << 63) - 1  # Catalyst's Long.MaxValue "no estimate" marker
 
 
-def _auto_strategy(size_src: DataFrame) -> str:
-    """Pick "local" (small: executor-local checkpoint) vs "persist" (big:
-    fault-tolerant DISK_ONLY) from the Catalyst size estimate of
-    `size_src` — the INPUT docs plan, whose parquet-scan statistics are
-    real, not the exploded gram plan whose stats degenerate to
+def _materialize(g: DataFrame, size_src: DataFrame | None = None) -> DataFrame:
+    """Gram-table materialization: the table feeds THREE plan branches
+    (per-doc sizes + both sides of the self-join), so without materialization
+    the split+explode+distinct (+ df cutoff) lineage re-executes per branch —
+    measured 2.8s -> 1.9s at sf0.1. LAZY either way (nothing runs until the
+    caller's first action — plan builders must stay side-effect-free):
+    localCheckpoint when the Catalyst size estimate of `size_src` (default
+    `g`) is at most GRAM_LOCAL_CKPT_MAX_BYTES, fault-tolerant
+    persist(DISK_ONLY) above it or when the estimate is unknown.
+
+    `size_src` should be the INPUT docs plan, whose parquet-scan statistics
+    are real, not the exploded gram plan whose stats degenerate to
     Long.MaxValue. The gram table is a small constant factor of the corpus
-    text bytes, so the docs estimate is the right monotone proxy. Unknown
-    or failed estimates fall back to the fault-tolerant choice."""
+    text bytes, so the docs estimate is the right monotone proxy."""
+    src = size_src if size_src is not None else g
     try:
-        est = int(
-            size_src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = int(src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 — stats are advisory
-        return "persist"
-    if est >= _STATS_UNKNOWN:
-        return "persist"
-    return "local" if est <= GRAM_LOCAL_CKPT_MAX_BYTES else "persist"
+        est = _STATS_UNKNOWN
+    if est < _STATS_UNKNOWN and est <= GRAM_LOCAL_CKPT_MAX_BYTES:
+        return g.localCheckpoint(eager=False)
+    return g.persist(StorageLevel.DISK_ONLY)
 
 
 def drop_hot_grams(
@@ -123,7 +106,6 @@ def restricted_filtered_grams(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_gram_df: int | None = 1000,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Candidate-restricted gram table with the FULL-corpus df cutoff — the
     shape candidate-verification paths need. Document frequency must count
@@ -133,9 +115,7 @@ def restricted_filtered_grams(
     FIRST and the corpus-df filter second — identical output, candidate-
     proportional join cost. The unrestricted gram table feeds both the df
     count and the restricted branch, so it is materialized once."""
-    g0 = _materialize(
-        word_ngrams(docs, n, text_col, id_col), materialize, size_src=docs
-    )
+    g0 = _materialize(word_ngrams(docs, n, text_col, id_col), size_src=docs)
     gc = g0.join(cand_ids, "id", "left_semi")
     if max_gram_df is not None:
         gc = drop_hot_grams(gc, g0, max_gram_df)
@@ -174,7 +154,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     max_gram_df: int | None = 1000,
     grams: DataFrame | None = None,
-    materialize: str = "auto",
 ) -> DataFrame:
     """(id_a, id_b, jaccard_10k) for pairs with n-gram Jaccard >= threshold.
 
@@ -188,12 +167,12 @@ def jaccard_pairs(
     When `grams` is supplied (candidate-verification paths), `max_gram_df`
     counts df over THAT table — pass a full-corpus-filtered table (see
     restricted_filtered_grams) and max_gram_df=None to keep output identical
-    to the unrestricted run. `materialize` controls the materialization of
-    the grouped per-gram id-list table, which feeds both the sizes and the
-    pair-expansion branches (see _materialize; "auto" size-guards between
-    executor-local checkpoint and fault-tolerant DISK_ONLY persist).
-    max_gram_df=None (exact-parity runs) removes the bound on the inline
-    per-gram pair expansion — at web scale always keep a cutoff."""
+    to the unrestricted run. The grouped per-gram id-list table feeds both
+    the sizes and the pair-expansion branches, so it is materialized once
+    (see _materialize: executor-local checkpoint small, fault-tolerant
+    DISK_ONLY persist big). max_gram_df=None (exact-parity runs) removes
+    the bound on the inline per-gram pair expansion — at web scale always
+    keep a cutoff."""
     g = grams if grams is not None else word_ngrams(docs, n, text_col, id_col)
     # ONE groupBy on the gram replaces the old df-count + join + self-join
     # shape (three exchanges of (id, gram) rows, the gram string shuffled on
@@ -208,9 +187,7 @@ def jaccard_pairs(
     )
     if max_gram_df is not None:
         by_gram = by_gram.where(F.size("ids") <= max_gram_df)
-    by_gram = _materialize(
-        by_gram.select("ids"), materialize, size_src=docs
-    )
+    by_gram = _materialize(by_gram.select("ids"), size_src=docs)
     sizes = (
         by_gram.select(F.explode("ids").alias("id"))
         .groupBy("id")

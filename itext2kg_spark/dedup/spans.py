@@ -61,7 +61,6 @@ def duplicated_span_starts(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: str = "auto",
 ) -> DataFrame:
     """(id, pos) start positions of duplicated windows in NON-keeper docs.
 
@@ -71,13 +70,10 @@ def duplicated_span_starts(
     The positional gram table feeds two plan branches (the gram statistics
     aggregation and the probe side of the stats join), so without
     materialization the text scan + split + posexplode lineage re-executes
-    per branch; ``materialize`` uses ngram's lazy size-guarded strategy
+    per branch; it is materialized once with ngram's lazy size guard
     (executor-local checkpoint small, fault-tolerant DISK_ONLY persist big).
     """
-    pg = _materialize(
-        positional_ngrams(docs, k, text_col, id_col), materialize,
-        size_src=docs,
-    )
+    pg = _materialize(positional_ngrams(docs, k, text_col, id_col), size_src=docs)
     stats = (
         pg.select("id", "gram")
         .distinct()
@@ -97,7 +93,6 @@ def span_dedup(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: str = "auto",
 ) -> DataFrame:
     """(doc_id, clean_text, n_tokens, n_removed): corpus with cross-document
     duplicated spans cut out of every non-keeper document.
@@ -116,7 +111,7 @@ def span_dedup(
     # id_col='doc_id'), joining on F.col(id_col) == F.col('id') would be
     # ambiguous and drop('id') would eat the user's column
     dup = (
-        duplicated_span_starts(docs, k, text_col, id_col, materialize)
+        duplicated_span_starts(docs, k, text_col, id_col)
         .groupBy("id")
         .agg(F.collect_list("pos").alias("__dups"))
         .withColumnRenamed("id", "__dup_id")

@@ -5,10 +5,11 @@ The reference computes a dense (N, M) cosine matrix on the driver
 candidates come from one of two shuffle-parallel plans:
 
   * "broadcast": exact all-pairs. The small side (bounded by
-    `broadcast_limit`) is shipped to every partition as a numpy matrix and
-    each Arrow batch of the big side scores against it with one BLAS matmul
-    (`mapInPandas`) — the same vectorized-batch-cosine optimization the
-    reference uses, but distributed over partitions. This beats expressing
+    `MatchConfig.candidate_broadcast_limit`) is shipped to every partition
+    as a numpy matrix and each Arrow batch of the big side scores against
+    it with one BLAS matmul (`mapInPandas`) — the same
+    vectorized-batch-cosine optimization the reference uses, but
+    distributed over partitions. This beats expressing
     the dot product as Catalyst `zip_with`/`aggregate` by ~100x: higher-order
     array functions are interpreted per element, a (batch x dim) @ (dim x M)
     matmul is BLAS.
@@ -16,8 +17,9 @@ candidates come from one of two shuffle-parallel plans:
     signatures of r sign-bits each; rows sharing any (band, signature) bucket
     become candidates; an Arrow-vectorized exact cosine then filters.
     Collision prob for a pair at cosine θ is 1-(1-p^r)^B, p = 1-arccos(θ)/π —
-    (r=6, B=24) ≥ 0.997 recall at θ=0.7. Near-linear in rows; the bucket
-    join shuffles on (band, sig), hot buckets split by AQE.
+    (r=6, B=24; LSH_ROWS, LSH_BANDS) ≥ 0.997 recall at θ=0.7. Near-linear
+    in rows; the bucket join shuffles on (band, sig), hot buckets split by
+    AQE.
 
 Both return (id_a, id_b, sim) with id_a < id_b, deduped across buckets; or,
 given a second item set `right`, the bipartite pairs (id_a from the first
@@ -57,6 +59,13 @@ from itext2kg_spark.config import MatchConfig
 # exact tie (token permutations embed identically) must still go to the
 # smallest id on every path.
 TIE_DECIMALS = 9
+
+# LSH shape: LSH_ROWS sign-bits per band, LSH_BANDS bands. Recall for
+# cosine θ: 1 - (1 - p^rows)^bands with p = 1 - arccos(θ)/π.
+# (6, 24) gives ≥0.997 recall at θ=0.7 and ≥0.9996 at θ=0.8.
+LSH_ROWS = 6
+LSH_BANDS = 24
+LSH_SEED = 1729
 
 
 def md5_rademacher(seed: int, n_rows: int, dim: int) -> "np.ndarray":
@@ -202,7 +211,7 @@ def _broadcast_pairs(
 ) -> DataFrame:
     """Exact pairs via per-partition BLAS matmul: each Arrow batch of
     `probe(id, emb, ...)` scores against the broadcast small side (`ids`,
-    unit rows `mat`, <= broadcast_limit rows).
+    unit rows `mat`, at most the caller's broadcast row limit).
 
     Returns (id_a, id_b, sim, <probe's other columns>): id_a a broadcast id,
     id_b a probe id. The self form (both sides one item set) keeps
@@ -266,8 +275,6 @@ def candidate_pairs(
     items: DataFrame,
     cfg: MatchConfig,
     threshold: float,
-    emb_col: str = "emb",
-    id_col: str = "id",
     n_items: int | None = None,
     emb_dim: int | None = None,
     right: DataFrame | None = None,
@@ -288,7 +295,7 @@ def candidate_pairs(
         method = "broadcast" if n <= cfg.candidate_broadcast_limit(emb_dim) else "lsh"
 
     def emb_items(df: DataFrame) -> DataFrame:
-        return df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("emb"))
+        return df.select("id", "emb")
 
     if method == "broadcast":
         rows = emb_items(items).collect()
@@ -312,14 +319,12 @@ def candidate_pairs(
     if emb_dim:
         dim = emb_dim
     else:  # embedding dim read from one row (the schema doesn't carry it)
-        first = items.select(F.size(emb_col).alias("d")).first()
+        first = items.select(F.size("emb").alias("d")).first()
         dim = int(first["d"]) if first else 2
-    sigs = lsh_signatures_udf(dim, cfg.lsh_rows, cfg.lsh_bands, cfg.lsh_seed)
+    sigs = lsh_signatures_udf(dim, LSH_ROWS, LSH_BANDS, LSH_SEED)
 
     def sig_items(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("id"), F.explode(sigs(F.col(emb_col))).alias("sig")
-        )
+        return df.select("id", F.explode(sigs(F.col("emb"))).alias("sig"))
 
     if right is None:
         scored = score_pairs(bucket_pairs(sig_items(items), "sig"), emb_items(items))

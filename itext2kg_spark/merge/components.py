@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Round cap for the iteration below and for resolve's distributed leader
+# fixpoint (each CC round does neighbor-min + pointer-jumping, so
+# convergence is O(log diameter)).
+CC_MAX_ITER = 25
+
 
 def _driver_union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
     """Union-find over collected pairs; returns id -> min-id-of-component."""
@@ -44,12 +49,10 @@ def _driver_union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
 
 
 def connected_components(
-    vertices: DataFrame,
     edges: DataFrame,
-    max_iter: int = 25,
     driver_limit: int = 2_000_000,
 ) -> DataFrame:
-    """vertices(id) + edges(id_a, id_b) -> (id, comp); comp = min id in component.
+    """edges(id_a, id_b) -> (id, comp); comp = min id in component.
 
     Only vertices touched by at least one edge are returned, on either path —
     untouched vertices are their own component by definition (callers
@@ -69,7 +72,7 @@ def connected_components(
         comp = _driver_union_find([(r["id_a"], r["id_b"]) for r in sample])
         # touched ids only, like the distributed path: callers coalesce
         # untouched ids to themselves
-        return vertices.sparkSession.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             list(comp.items()), schema="id long, comp long"
         )
 
@@ -83,7 +86,7 @@ def connected_components(
     lab = lab.localCheckpoint()
     prev_sum = lab.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
 
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr = und.join(lab, und.src == lab.id).select(
             F.col("dst").alias("id"), F.col("comp")
         )

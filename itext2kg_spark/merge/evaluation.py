@@ -37,7 +37,7 @@ def residual_duplicate_pairs(
         F.xxhash64(*key_cols).alias("id"),
         unit(F.col(emb_col).cast("array<double>")).alias("emb"),
     )
-    return candidate_pairs(items, cfg, threshold, emb_col="emb", id_col="id")
+    return candidate_pairs(items, cfg, threshold)
 
 
 def er_rr_precision(

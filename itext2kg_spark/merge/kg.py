@@ -244,7 +244,6 @@ def canonicalize_kg(
             cfg.match,
             cfg.match.ent_threshold,
             key_cols=["name", "label"],
-            emb_col="emb",
             order_col="first_seen",
             emb_dim=cfg.embed.dim,
             n_items_hint=ent_hint,
@@ -275,7 +274,6 @@ def canonicalize_kg(
             cfg.match,
             cfg.match.rel_threshold,
             key_cols=["pred"],
-            emb_col="emb",
             order_col="first_seen",
             emb_dim=cfg.embed.dim,
             n_items_hint=pred_hint,

@@ -26,9 +26,10 @@ linking or representative windows.
 
 Two physical strategies, chosen by the number of batch (non-store) rows,
 which is the n x n the driver path holds (mirroring Spark's own
-small-side/broadcast reasoning):
+small-side/broadcast reasoning); the row limit is
+`MatchConfig.effective_broadcast_limit`:
 
-  * driver path (n <= broadcast_limit): one collect of the batch rows, a
+  * driver path (n <= limit): one collect of the batch rows, a
     BLAS n x n cosine among them, one streamed job that scores every stored
     row against the broadcast batch matrix and returns each batch row's best
     stored match, then argmax linking, union-find and the representative
@@ -36,7 +37,7 @@ small-side/broadcast reasoning):
     downstream consumers never re-execute upstream lineage. A batch's
     distinct entity set is orders of magnitude smaller than its mention
     table, so this is the common case.
-  * distributed path (n > broadcast_limit): bipartite candidate pairs from
+  * distributed path (n > limit): bipartite candidate pairs from
     every batch row to the batch and the stored rows (the batch broadcast or
     LSH-banded, the rest streamed) + vectorized cosine verify + iterative
     DataFrame connected components (merge/components.py) over the batch ids
@@ -61,7 +62,21 @@ from itext2kg_spark.merge.candidates import (
     _broadcast_pairs,
     candidate_pairs,
 )
-from itext2kg_spark.merge.components import _driver_union_find, connected_components
+from itext2kg_spark.merge.components import (
+    CC_MAX_ITER,
+    _driver_union_find,
+    connected_components,
+)
+
+# Distinct-item ceiling for DISTRIBUTED leader-mode resolution: its fold
+# rank is a global row_number (a single-partition sort of the distinct item
+# table) and the fixpoint runs ~2 actions per chain-depth round — fine for a
+# parity mode, pathological at extreme cardinality. Above this,
+# resolve_items refuses with guidance to use the order-free default
+# (link_mode="best"), rather than silently sorting 10^8 rows on one
+# partition. The driver leader path is unaffected (it is already bounded by
+# effective_broadcast_limit).
+LEADER_SORT_LIMIT = 10_000_000
 
 
 def _order_key(row, key_cols: list[str], order_col: str | None):
@@ -83,7 +98,6 @@ def _store_best(
     ids: np.ndarray,
     mat: np.ndarray,
     key_cols: list[str],
-    emb_col: str,
     threshold: float,
     inclusive: bool,
     link_mode: str,
@@ -93,9 +107,7 @@ def _store_best(
     best-scoring stored rows. Ties go to the smallest stored id in `best`
     mode and to the smallest key (the fold's leader order) in `leader` mode.
     Returns batch id -> (sim, stored id, stored keys)."""
-    probe = store.select(
-        F.xxhash64(*key_cols).alias("id"), F.col(emb_col).alias("emb"), *key_cols
-    )
+    probe = store.select(F.xxhash64(*key_cols).alias("id"), "emb", *key_cols)
     tie = 1 if link_mode == "best" else 2
     best: dict[int, tuple] = {}
     for r in _broadcast_pairs(
@@ -116,7 +128,6 @@ def _driver_resolve(
     inclusive: bool,
     order_col: str | None,
     link_mode: str,
-    emb_col: str,
     store: DataFrame | None,
 ) -> list[tuple]:
     """numpy/union-find resolution of the collected batch rows (each with
@@ -126,14 +137,12 @@ def _driver_resolve(
     if n == 0:
         return []
     ids = np.asarray([r["__id"] for r in rows], dtype=np.int64)
-    mat = np.asarray([np.asarray(r[emb_col], dtype=np.float64) for r in rows])
+    mat = np.asarray([np.asarray(r["emb"], dtype=np.float64) for r in rows])
     keys = [tuple(r[c] for c in key_cols) for r in rows]
     store_best = (
         {}
         if store is None
-        else _store_best(
-            store, ids, mat, key_cols, emb_col, threshold, inclusive, link_mode
-        )
+        else _store_best(store, ids, mat, key_cols, threshold, inclusive, link_mode)
     )
 
     sims = mat @ mat.T
@@ -210,7 +219,7 @@ def _driver_resolve(
 
 
 def _distributed_leader(
-    with_id: DataFrame, pairs: DataFrame, order: list, max_iter: int
+    with_id: DataFrame, pairs: DataFrame, order: list
 ) -> DataFrame:
     """Distributed sequential-fold (leader) resolution: (id, comp) where
     comp = the surviving leader each absorbed item folds into.
@@ -258,7 +267,7 @@ def _distributed_leader(
         "id", F.lit(True).alias("leader"), F.col("id").alias("comp")
     )
     undecided = nodes
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         if undecided.isEmpty():
             break
         cand = directed.join(
@@ -315,14 +324,12 @@ def resolve_items(
     cfg: MatchConfig,
     threshold: float,
     key_cols: list[str],
-    emb_col: str = "emb",
-    n_items: int | None = None,
     order_col: str | None = None,
     emb_dim: int | None = None,
     n_items_hint: int | None = None,
     store: DataFrame | None = None,
 ) -> DataFrame:
-    """items(key_cols..., emb [, is_existing][, order_col]) ->
+    """items(key_cols..., emb [, order_col]) ->
     items + (comp, is_rep) + canonical keys `canon_<key>`.
 
     `emb` must be unit-normalized. Items cluster when connected through
@@ -332,13 +339,9 @@ def resolve_items(
     (reference argmax runs batch-against-store only, matcher.py:65-94), so
     a component contains at most one store row and store rows always
     canonicalize to themselves. Only `items` rows are returned.
-    Store rows may instead be marked inside `items` with a boolean
-    `is_existing` column; they are split off as `store` and come back
-    mapped to themselves (comp = their id, is_rep, canon = own key).
-    `n_items` / `n_items_hint` count the non-store rows.
     `emb_dim` (vector width) byte-bounds the driver-collect path — without it
     the limit is row-count-only.
-    `n_items_hint` — an approximate cardinality from the caller (e.g. one
+    `n_items_hint` — an approximate count of `items` from the caller (e.g. one
     approx_count_distinct agg over an already-materialized mention table).
     When the hint sits clearly under the limit the decision count job is
     skipped and the driver path collects directly; the hint only ever picks
@@ -346,23 +349,6 @@ def resolve_items(
     estimator error cannot change results — at worst the collect carries a
     few percent more rows than the byte budget assumed.
     """
-    if "is_existing" in items.columns:
-        if store is not None:
-            raise ValueError("pass stored rows as `store` or `is_existing`, not both")
-        ex = F.col("is_existing")
-        resolved = resolve_items(
-            items.where(~ex).drop("is_existing"), cfg, threshold, key_cols,
-            emb_col, n_items, order_col, emb_dim, n_items_hint,
-            store=items.where(ex).select(*key_cols, emb_col),
-        ).withColumn("is_existing", F.lit(False))
-        stored = items.where(ex).select(
-            "*",
-            F.xxhash64(*key_cols).alias("comp"),
-            F.lit(True).alias("is_rep"),
-            *[F.col(c).alias(f"canon_{c}") for c in key_cols],
-        )
-        return stored.unionByName(resolved)
-
     spark = items.sparkSession
     out_cols = items.columns + ["comp", "is_rep"] + [f"canon_{c}" for c in key_cols]
 
@@ -373,24 +359,20 @@ def resolve_items(
     limit = cfg.effective_broadcast_limit(2 * emb_dim if emb_dim else None)
     keyed = items.withColumn("__id", F.xxhash64(*key_cols))
     rows = None
-    if n_items is None:
-        # Path decision via a count whose plan PRUNES the embedding columns
-        # (an unused deterministic ArrowEvalPython projection is removed by
-        # column pruning, so no Python stage runs), then a plain collect on
-        # the driver path. The previous one-action limit(n+1).collect()
-        # looked cheaper but CollectLimitExec executes a global limit as up
-        # to log4(partitions) sequential scale-up jobs — measured ~3x the
-        # plain collect on a bench-scale entity table; two cheap jobs beat
-        # one slow pseudo-job. The count stays O(distinct items) at any
-        # scale and keys the distributed path off the exact cardinality.
-        if (
-            n_items_hint is not None
-            and n_items_hint * 1.2 + 100 <= limit
-        ):
-            rows = keyed.collect()
-            n_items = len(rows)
-        else:
-            n_items = items.count()
+    # Path decision via a count whose plan PRUNES the embedding columns (an
+    # unused deterministic ArrowEvalPython projection is removed by column
+    # pruning, so no Python stage runs), then a plain collect on the driver
+    # path. The previous one-action limit(n+1).collect() looked cheaper but
+    # CollectLimitExec executes a global limit as up to log4(partitions)
+    # sequential scale-up jobs — measured ~3x the plain collect on a
+    # bench-scale entity table; two cheap jobs beat one slow pseudo-job. The
+    # count stays O(distinct items) at any scale and keys the distributed
+    # path off the exact cardinality.
+    if n_items_hint is not None and n_items_hint * 1.2 + 100 <= limit:
+        rows = keyed.collect()
+        n_items = len(rows)
+    else:
+        n_items = items.count()
 
     if n_items <= limit:
         if rows is None:
@@ -403,7 +385,6 @@ def resolve_items(
             cfg.inclusive,
             order_col,
             cfg.link_mode,
-            emb_col,
             store,
         )
         # Build the output entirely on the driver: the collected rows already
@@ -438,19 +419,12 @@ def resolve_items(
     with_id = keyed.withColumnRenamed("__id", "id").localCheckpoint()
     # directed candidate links: every batch row (broadcast / banded side) to
     # every other batch row and every stored row (streamed side)
-    right = with_id.select("id", emb_col)
+    right = with_id.select("id", "emb")
     if store is not None:
-        store = store.select(F.xxhash64(*key_cols).alias("id"), *key_cols, emb_col)
-        right = right.unionByName(store.select("id", emb_col))
+        store = store.select(F.xxhash64(*key_cols).alias("id"), *key_cols, "emb")
+        right = right.unionByName(store.select("id", "emb"))
     pairs = candidate_pairs(
-        with_id,
-        cfg,
-        threshold,
-        emb_col=emb_col,
-        id_col="id",
-        n_items=n_items,
-        emb_dim=emb_dim,
-        right=right,
+        with_id, cfg, threshold, n_items=n_items, emb_dim=emb_dim, right=right
     )
     batch_order = []
     if order_col is not None:
@@ -458,13 +432,12 @@ def resolve_items(
     batch_order += [F.col(c).asc() for c in key_cols]
 
     if cfg.link_mode == "leader":
-        if n_items > cfg.leader_sort_limit:
+        if n_items > LEADER_SORT_LIMIT:
             raise ValueError(
                 f"link_mode='leader' needs a global fold-order sort of the "
-                f"distinct-item table ({n_items} rows > leader_sort_limit="
-                f"{cfg.leader_sort_limit}); at this cardinality use the "
-                f"order-free default link_mode='best' (raise "
-                f"MatchConfig.leader_sort_limit to override)"
+                f"distinct-item table ({n_items} rows > LEADER_SORT_LIMIT="
+                f"{LEADER_SORT_LIMIT}); at this cardinality use the "
+                f"order-free default link_mode='best'"
             )
         # fold nodes: the batch rows plus the stored rows a pair touches,
         # which lead from the start (they sort first)
@@ -485,8 +458,7 @@ def resolve_items(
                 )
             )
         comp = _distributed_leader(
-            nodes, pairs, [F.col("__stored").desc(), *batch_order],
-            max_iter=cfg.cc_max_iter,
+            nodes, pairs, [F.col("__stored").desc(), *batch_order]
         )
     else:
         # Keep only each batch row's single best-scoring link (argmax parity
@@ -501,9 +473,7 @@ def resolve_items(
             .where(F.col("__rn") == 1)
             .select("id_a", "id_b")
         )
-        comp = connected_components(
-            with_id.select("id"), best, max_iter=cfg.cc_max_iter
-        )
+        comp = connected_components(best)
     labeled = with_id.join(comp, "id", "left").withColumn(
         "comp", F.coalesce(F.col("comp"), F.col("id"))
     )

@@ -13,9 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def synth_events(
-    spark: SparkSession, n: int, partitions: int = 64, checkpoint: bool = True
-) -> DataFrame:
+def synth_events(spark: SparkSession, n: int, partitions: int = 64) -> DataFrame:
     base = F.lit("2024-01-01 00:00:00").cast("timestamp")
     df = spark.range(n).select(
         F.col("id").alias("event_id"),
@@ -35,4 +33,4 @@ def synth_events(
     )
     df = df.repartition(partitions)
     # probes time the operators, not the generator
-    return df.localCheckpoint() if checkpoint else df
+    return df.localCheckpoint()

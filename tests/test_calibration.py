@@ -116,7 +116,6 @@ def _our_resolution(spark, names, embs, threshold, link_mode="leader", cfg=None)
         cfg or MatchConfig(link_mode=link_mode),
         threshold,
         key_cols=["name"],
-        emb_col="emb",
         order_col="first_seen",
     )
     return {r["name"]: r["canon_name"] for r in resolved.collect()}
@@ -184,7 +183,7 @@ def test_distributed_leader_matches_driver_fold(spark, ref):
     dist = _our_resolution(
         spark, names, embs, theta,
         cfg=MatchConfig(
-            link_mode="leader", broadcast_limit=0, candidate_method="broadcast"
+            link_mode="leader", driver_matrix_bytes=0, candidate_method="broadcast"
         ),
     )
     assert dist == driver

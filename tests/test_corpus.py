@@ -260,6 +260,7 @@ def test_incremental_verdict_matches_full_union(spark):
     for seed in (11, 12):
         rng = random.Random(seed)
         stored_df, stored, bridge = None, {}, None
+        stored_rows = []
         for b in range(3):
             rows, drop, keep, bridge = _verdict_batch(rng, b, stored, bridge)
             new = spark.createDataFrame(rows, SCHEMA)
@@ -270,8 +271,9 @@ def test_incremental_verdict_matches_full_union(spark):
             assert got_rows == sorted(ref.select(cols).collect()), (seed, b)
             ids = {r["doc_id"] for r in got_rows}
             assert keep <= ids and not drop & ids, (seed, b)
-            delta = spark.createDataFrame(got_rows, got.select(cols).schema)
-            stored_df = delta if stored_df is None else stored_df.unionByName(delta)
+            # one flat scan per batch, not a union chain that grows
+            stored_rows += got_rows
+            stored_df = spark.createDataFrame(stored_rows, got.select(cols).schema)
             text = dict(rows)
             stored.update((i, text[i].split()) for i in ids)
 

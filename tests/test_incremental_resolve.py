@@ -3,7 +3,7 @@ stored entities as a streamed candidate side.
 
 Checked here against a test-local numpy oracle of the reference semantics
 (store ∪ batch, links only from batch rows, union-find, representatives by
-is_existing, first_seen, key), over several batches, on the driver and the
+stored first, then first_seen, key), over several batches, on the driver and the
 distributed path in both link modes; plus what the batch-proportional shape
 promises: only new keys are embedded, no store×store pair is scored and the
 stored side is never collected to the driver.

@@ -188,11 +188,12 @@ def test_existing_store_representative_wins(spark):
     assert len(row["t_obs"]) == 2  # original + re-observation
 
 
-def test_distributed_leader_refuses_above_sort_limit(spark):
+def test_distributed_leader_refuses_above_sort_limit(spark, monkeypatch):
     """Leader mode's distributed path needs a single-partition sort of the
-    distinct-item table for the fold rank; above leader_sort_limit it must
+    distinct-item table for the fold rank; above LEADER_SORT_LIMIT it must
     refuse with guidance instead of silently sorting (resolve.py guard)."""
     from itext2kg_spark.config import MatchConfig
+    from itext2kg_spark.merge import resolve
     from itext2kg_spark.merge.resolve import resolve_items
 
     df = spark.createDataFrame(
@@ -201,19 +202,15 @@ def test_distributed_leader_refuses_above_sort_limit(spark):
     )
     cfg = MatchConfig(
         link_mode="leader",
-        broadcast_limit=0,  # force the distributed path
+        driver_matrix_bytes=0,  # force the distributed path
         candidate_method="broadcast",
-        leader_sort_limit=3,
     )
-    with pytest.raises(ValueError, match="leader_sort_limit"):
-        resolve_items(
-            df, cfg, 0.8, key_cols=["name"], emb_col="emb",
-            order_col="first_seen",
-        )
+    monkeypatch.setattr(resolve, "LEADER_SORT_LIMIT", 3)
+    with pytest.raises(ValueError, match="LEADER_SORT_LIMIT"):
+        resolve_items(df, cfg, 0.8, key_cols=["name"], order_col="first_seen")
     # at/below the limit the distributed fold still runs
     ok = resolve_items(
-        df.limit(3), cfg, 0.8, key_cols=["name"], emb_col="emb",
-        order_col="first_seen",
+        df.limit(3), cfg, 0.8, key_cols=["name"], order_col="first_seen"
     )
     assert ok.count() == 3
 
@@ -233,6 +230,25 @@ def test_match_config_rejects_values_no_path_honours():
         MatchConfig(link_mode="all")
     with pytest.raises(ValueError, match="candidate_method"):
         MatchConfig(candidate_method="minhash")
+
+
+def test_path_cutovers_pinned():
+    """The row limits that pick the driver vs distributed resolve path and
+    the broadcast vs LSH candidate path, at the configs callers build:
+    default (entity vectors are name+label, 2 x dim wide), the perfbench
+    1,024-row driver limit, and the forced-distributed test config."""
+    from itext2kg_spark.config import MatchConfig
+
+    default = MatchConfig()
+    assert default.effective_broadcast_limit(2 * 256) == 32_768
+    assert default.effective_broadcast_limit(2 * 1536) == 10_922
+    assert default.effective_broadcast_limit(None) == 32_768
+    perfbench = MatchConfig(driver_matrix_bytes=1024**2 * 8)
+    assert perfbench.effective_broadcast_limit(2 * 256) == 1_024
+    assert MatchConfig(driver_matrix_bytes=0).effective_broadcast_limit(2 * 256) == 0
+    assert [default.candidate_broadcast_limit(d) for d in (64, 256, 1536, None)] == [
+        65_536, 65_536, 21_845, 65_536
+    ]
 
 
 def test_resolve_threads_inherit_caller_job_group(spark):
@@ -262,8 +278,8 @@ def test_resolve_threads_inherit_caller_job_group(spark):
 def test_driver_and_distributed_paths_equivalent_randomized(spark):
     """Randomized equivalence of the two physical resolution strategies: the
     driver BLAS path and the LSH/CC distributed path must induce the same
-    clustering (keys grouped by component) and the same key -> canonical-key
-    mapping, for both is_existing mixes and both threshold regimes. comp ids
+    clustering (batch keys grouped by component) and the same key ->
+    canonical-key mapping, for random batch/store mixes. comp ids
     themselves differ by construction (indices vs xxhash64), so the partition
     structure is compared, not the labels."""
     import random
@@ -274,13 +290,17 @@ def test_driver_and_distributed_paths_equivalent_randomized(spark):
     rnd = random.Random(1234)
 
     def run(cfg, rows):
-        df = spark.createDataFrame(
-            rows, "name string, first_seen long, is_existing boolean,"
-            " emb array<double>"
+        batch = spark.createDataFrame(
+            [(n, i, e) for n, i, stored, e in rows if not stored],
+            "name string, first_seen long, emb array<double>",
+        )
+        store = spark.createDataFrame(
+            [(n, e) for n, _, stored, e in rows if stored],
+            "name string, emb array<double>",
         )
         out = resolve_items(
-            df, cfg, 0.9, key_cols=["name"], emb_col="emb",
-            order_col="first_seen",
+            batch, cfg, 0.9, key_cols=["name"], order_col="first_seen",
+            store=store,
         ).collect()
         groups = {}
         for r in out:
@@ -308,7 +328,7 @@ def test_driver_and_distributed_paths_equivalent_randomized(spark):
                 )
             )
         driver_cfg = MatchConfig(candidate_method="broadcast")
-        dist_cfg = MatchConfig(broadcast_limit=0, candidate_method="broadcast")
+        dist_cfg = MatchConfig(driver_matrix_bytes=0, candidate_method="broadcast")
         got_d = run(driver_cfg, rows)
         got_x = run(dist_cfg, rows)
         assert got_d == got_x, f"trial {trial}: {got_d} != {got_x}"
@@ -350,28 +370,28 @@ def test_best_tie_goes_to_smallest_id_in_any_row_order(spark, path):
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     assert np.array_equal(vecs[0], vecs[1])
     rows = [
-        (n, "person", [float(x) for x in v], n != "john smyth", i)
-        for i, (n, v) in enumerate(zip(names, vecs))
+        (n, "person", [float(x) for x in v])
+        for n, v in zip(names, vecs)
     ]
-    schema = (
-        "name string, label string, emb array<double>, is_existing boolean,"
-        " first_seen long"
+    schema = "name string, label string, emb array<double>"
+    batch = spark.createDataFrame(
+        [rows[2] + (2,)], schema + ", first_seen long"
     )
     cfg = (
         MatchConfig()
         if path == "driver"
-        else MatchConfig(broadcast_limit=0, candidate_method="broadcast")
+        else MatchConfig(driver_matrix_bytes=0, candidate_method="broadcast")
     )
     got = set()
-    for order in (rows, rows[::-1]):
+    for order in (rows[:2], rows[1::-1]):
         for parts in (1, 3):  # one or three BLAS blocks score the tie
             out = resolve_items(
-                spark.createDataFrame(order, schema).coalesce(parts), cfg, 0.45,
-                key_cols=["name", "label"], order_col="first_seen",
+                batch, cfg, 0.45, key_cols=["name", "label"],
+                order_col="first_seen",
+                store=spark.createDataFrame(order, schema).coalesce(parts),
             )
             canon = {r["name"]: r["canon_name"] for r in out.collect()}
-            assert canon["john smith"] == "john smith"
-            assert canon["smith john"] == "smith john"
+            assert set(canon) == {"john smyth"}  # only batch rows return
             got.add(canon["john smyth"])
     ids = spark.createDataFrame(rows[:2], schema).select(
         "name", F.xxhash64("name", "label").alias("id")

@@ -496,36 +496,29 @@ def test_verified_df_cutoff_counts_full_corpus(spark):
 
 
 def test_gram_materialize_guard_flips(spark, docs, monkeypatch):
-    """The "auto" gram materialization picks non-fault-tolerant
-    localCheckpoint only below GRAM_LOCAL_CKPT_MAX_BYTES (estimated); above
-    it the table goes to persist(DISK_ONLY) with lineage retained. Output is
-    identical under every strategy."""
+    """The gram materialization picks non-fault-tolerant localCheckpoint
+    only at or below GRAM_LOCAL_CKPT_MAX_BYTES (estimated); above it the
+    table goes to persist(DISK_ONLY) with lineage retained. Output is
+    identical on both sides of the guard."""
     from itext2kg_spark.dedup import ngram
     from pyspark.storagelevel import StorageLevel
-
-    base = {tuple(r) for r in jaccard_pairs(docs, threshold=0.5).collect()}
-    for strategy in ("none", "local", "persist"):
-        got = {
-            tuple(r)
-            for r in jaccard_pairs(
-                docs, threshold=0.5, materialize=strategy
-            ).collect()
-        }
-        assert got == base, strategy
 
     # parquet scans carry real Catalyst size statistics — that is the plan
     # shape the guard reads (createDataFrame plans report "unknown", which
     # falls back to the fault-tolerant choice)
     pq = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    monkeypatch.setattr(ngram, "GRAM_LOCAL_CKPT_MAX_BYTES", 1)
-    assert ngram._auto_strategy(pq) == "persist"
-    persisted = ngram._materialize(ngram.word_ngrams(pq), "persist")
-    assert persisted.storageLevel == StorageLevel.DISK_ONLY
-    persisted.unpersist()
-    monkeypatch.setattr(ngram, "GRAM_LOCAL_CKPT_MAX_BYTES", 1 << 60)
-    assert ngram._auto_strategy(pq) == "local"
+    got = {}
+    for limit, persisted in ((1, True), (1 << 60, False)):
+        monkeypatch.setattr(ngram, "GRAM_LOCAL_CKPT_MAX_BYTES", limit)
+        g = ngram._materialize(ngram.word_ngrams(pq), size_src=pq)
+        assert (g.storageLevel == StorageLevel.DISK_ONLY) == persisted, limit
+        g.unpersist()
+        got[limit] = {tuple(r) for r in jaccard_pairs(pq, threshold=0.5).collect()}
+    assert got[1] == got[1 << 60]
     # unknown-stats plans (createDataFrame) take the fault-tolerant branch
-    assert ngram._auto_strategy(docs) == "persist"
+    g = ngram._materialize(ngram.word_ngrams(docs), size_src=docs)
+    assert g.storageLevel == StorageLevel.DISK_ONLY
+    g.unpersist()
 
 
 def test_near_dup_clusters_transitive(spark):

@@ -22,19 +22,15 @@ def _vec(angle_deg: float) -> list[float]:
 
 
 def _items(spark, rows):
-    # rows: (name, label, angle, is_existing)
-    data = [(r[0], r[1], _vec(r[2]), bool(r[3])) for r in rows]
-    schema = "name string, label string, emb array<double>, is_existing boolean"
-    return spark.createDataFrame(data, schema)
+    # rows: (name, label, angle)
+    data = [(r[0], r[1], _vec(r[2])) for r in rows]
+    return spark.createDataFrame(data, "name string, label string, emb array<double>")
 
 
 # x at 25deg sits between store rows e1 (0deg) and e2 (50deg):
 # cos(x,e1)=cos(x,e2)=0.906 >= 0.8, cos(e1,e2)=0.64 < 0.8.
-BRIDGE_ROWS = [
-    ("e1", "L", 0.0, True),
-    ("e2", "L", 50.0, True),
-    ("x", "L", 25.0, False),
-]
+STORE_ROWS = [("e1", "L", 0.0), ("e2", "L", 50.0)]
+BRIDGE_ROWS = [("x", "L", 25.0)]
 
 
 def _canon_map(resolved):
@@ -49,16 +45,15 @@ def test_batch_entity_cannot_bridge_two_store_entities(spark, path):
     cfg = (
         MatchConfig()
         if path == "driver"
-        else MatchConfig(broadcast_limit=0, candidate_method="broadcast")
+        else MatchConfig(driver_matrix_bytes=0, candidate_method="broadcast")
     )
-    items = _items(spark, BRIDGE_ROWS)
     resolved = resolve_items(
-        items, cfg, threshold=0.8, key_cols=["name", "label"], emb_col="emb"
+        _items(spark, BRIDGE_ROWS), cfg, threshold=0.8,
+        key_cols=["name", "label"], store=_items(spark, STORE_ROWS),
     )
     canon = _canon_map(resolved)
-    # store rows always map to themselves
-    assert canon[("e1", "L")] == ("e1", "L")
-    assert canon[("e2", "L")] == ("e2", "L")
+    # only the batch row comes back: store rows are never re-resolved
+    assert set(canon) == {("x", "L")}
     # the batch entity merges onto exactly ONE store row (its argmax), never
     # bridging both (the two sims are equal up to rounding, so either store
     # row is a valid argmax)
